@@ -12,10 +12,16 @@ import java.util.Properties
 /** Keyed-merge sinks. The reference merges through Redshift (staging table
   * + `DELETE USING` / `INSERT SELECT` in one transaction —
   * cdc_util/redshift_sink.py:465-547); we provide the same algebra against
-  * two targets:
+  * four parquet targets — {whole-table, bucketed} × {type-1, SCD2} — and
+  * a JDBC sink:
   *
   *  - [[ParquetMergeTarget]] — pure-Spark merge into a parquet "table";
   *    lets every merge semantics be oracle-tested with no warehouse.
+  *  - [[BucketedParquetMergeTarget]] — the same merge on a key-bucketed
+  *    layout that rewrites only the buckets a batch touches (scale path).
+  *  - [[Scd2ParquetTarget]] / [[BucketedScd2Target]] — type-2 history
+  *    (every version with its validity interval), whole-table and
+  *    bucketed.
   *  - [[JdbcMergeSink]] — staging-table batch insert (Spark's executor-side
   *    JDBC writer) + a single driver-side transaction running portable
   *    ANSI merge SQL (`DELETE WHERE EXISTS` + `INSERT SELECT`), with
@@ -80,6 +86,37 @@ private[sink] object DirSwap {
       .foreach(hop => recover(hop,
         new java.io.File(table, hop.getName.stripPrefix(prefix))))
   }
+}
+
+/** On-disk layout of the bucketed targets: parquet partitioned by the
+  * stable key bucket `kb_aws`. */
+private[sink] object BucketLayout {
+  final val Kb = "kb_aws"
+
+  private def entries(path: String): Array[java.io.File] =
+    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
+
+  /** The layout marker: a table is bucketed iff it has `kb_aws=` partition
+    * directories. A pre-existing unbucketed target is migrated in one
+    * whole-table rewrite on its first merge, then every later batch takes
+    * the pruned path. */
+  def isBucketed(path: String): Boolean = entries(path).exists(_.getName.startsWith(s"$Kb="))
+
+  /** A legacy (unbucketed) table has data files at the top level. A
+    * directory with neither bucket dirs nor data files — e.g. a bucketed
+    * table whose every key was deleted (all bucket dirs removed) — must be
+    * treated as absent, not migrated (reading it would fail forever). */
+  def hasLegacyDataFiles(path: String): Boolean = entries(path).exists(_.getName.endsWith(".parquet"))
+
+  /** Write `df` (carrying `kb_aws`) as bucket directories under `tmp`,
+    * clustered on the bucket: the shuffle puts each bucket's rows in
+    * exactly one task, so each `kb_aws=N` directory gets exactly one file.
+    * Unclustered, every write task (one per scan split of the target plus
+    * one per stage partition) holds rows of nearly every bucket and opens
+    * a file for each, and the next merge's scan splits multiply the count
+    * again. */
+  def write(df: DataFrame, tmp: String): Unit =
+    df.repartition(col(Kb)).write.mode(SaveMode.Overwrite).partitionBy(Kb).parquet(tmp)
 }
 
 /** Parquet-backed merge target: read-modify-write with an atomic directory
@@ -188,22 +225,15 @@ final class Scd2ParquetTarget(path: String,
   * checkpoint replays (replays rewrite the same buckets idempotently —
   * [[graft.operators.Scd2.merge]] is a no-op on replayed content).
   * A legacy whole-table history (written by [[Scd2ParquetTarget]]) is
-  * migrated in one rewrite on its first merge here. */
+  * migrated in one rewrite on its first merge here. Every rewrite leaves
+  * one file per live bucket ([[BucketLayout.write]]). */
 final class BucketedScd2Target(path: String, buckets: Int = 64,
                                metaCols: Seq[String] = Seq("op_aws", "ts_ms_aws", "idx_aws"))
   extends MergeTarget {
+  import BucketLayout.Kb
 
-  private final val Kb = "kb_aws"
   private def exists: Boolean = new java.io.File(path).exists()
   private def recover(): Unit = DirSwap.recoverTable(path)
-
-  private def isBucketedLayout: Boolean =
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .exists(_.getName.startsWith(s"$Kb="))
-
-  private def hasLegacyDataFiles: Boolean =
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .exists(_.getName.endsWith(".parquet"))
 
   def snapshot(spark: SparkSession): DataFrame = {
     recover()
@@ -223,14 +253,13 @@ final class BucketedScd2Target(path: String, buckets: Int = 64,
     def initial(): DataFrame =
       graft.operators.Scd2.fromChangelog(stage, keys, "ts_ms_aws", tracked,
         tieBreak = Seq(col("idx_aws")), isDelete = isDelete)
-    if (!exists || !isBucketedLayout) {
+    if (!exists || !BucketLayout.isBucketed(path)) {
       // Create — or migrate a legacy whole-table history in one pass.
       val merged =
-        if (!exists || !hasLegacyDataFiles) initial()
+        if (!exists || !BucketLayout.hasLegacyDataFiles(path)) initial()
         else graft.operators.Scd2.merge(spark.read.parquet(path), stage, keys,
           "ts_ms_aws", tracked, isDelete)
-      merged.withColumn(Kb, bucketOf)
-        .write.mode(SaveMode.Overwrite).partitionBy(Kb).parquet(tmp)
+      BucketLayout.write(merged.withColumn(Kb, bucketOf), tmp)
       DirSwap.swap(new java.io.File(tmp), new java.io.File(path),
         new java.io.File(path + ".old"))
     } else {
@@ -249,8 +278,7 @@ final class BucketedScd2Target(path: String, buckets: Int = 64,
             .option("basePath", path).parquet(touchedDirs.toIndexedSeq: _*).drop(Kb)
           graft.operators.Scd2.merge(history, stage, keys, "ts_ms_aws", tracked, isDelete)
         }
-      merged.withColumn(Kb, bucketOf)
-        .write.mode(SaveMode.Overwrite).partitionBy(Kb).parquet(tmp)
+      BucketLayout.write(merged.withColumn(Kb, bucketOf), tmp)
       // History rows are never removed (deletes only close versions), but
       // allowMissingSrc keeps the swap robust to an all-skip batch.
       touched.foreach { b =>
@@ -276,7 +304,12 @@ final class BucketedScd2Target(path: String, buckets: Int = 64,
   *    and replays, so checkpoint-replayed batches rewrite the same buckets
   *    idempotently. A crash mid-swap leaves some buckets merged and some
   *    not; the replay re-merges all of them and converges (same
-  *    idempotence argument as the whole-table swap, per bucket).
+  *    idempotence argument as the whole-table swap, per bucket);
+  *  - every rewrite leaves ONE file per live bucket: the write is clustered
+  *    on `kb_aws` ([[BucketLayout.write]]), so each bucket is written by
+  *    exactly one task and write parallelism is bounded by the number of
+  *    touched buckets. A legacy bucket holding many files is compacted to
+  *    one the first time a merge touches it.
   *
   * Equivalent semantics to [[ParquetMergeTarget]] (asserted in tests);
   * `snapshot` drops the internal bucket column so readers see the same
@@ -284,8 +317,8 @@ final class BucketedScd2Target(path: String, buckets: Int = 64,
 final class BucketedParquetMergeTarget(path: String, buckets: Int = 64,
                                        metaCols: Seq[String] = Seq("op_aws", "ts_ms_aws", "idx_aws"))
   extends MergeTarget {
+  import BucketLayout.Kb
 
-  private final val Kb = "kb_aws"
   private def exists: Boolean = new java.io.File(path).exists()
 
   /** Restore any hop left by an interrupted swap — whole-table
@@ -298,22 +331,6 @@ final class BucketedParquetMergeTarget(path: String, buckets: Int = 64,
     spark.read.option("mergeSchema", "true").parquet(path).drop(Kb)
   }
 
-  /** The layout marker: a table is bucketed iff it has `kb_aws=` partition
-    * directories. A pre-existing unbucketed target (written by
-    * [[ParquetMergeTarget]]) is migrated in one whole-table rewrite on its
-    * first merge here, then every later batch takes the pruned path. */
-  private def isBucketedLayout: Boolean =
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .exists(_.getName.startsWith(s"$Kb="))
-
-  /** A legacy (unbucketed) table has data files at the top level. A
-    * directory with neither bucket dirs nor data files — e.g. a bucketed
-    * table whose every key was deleted (all bucket dirs removed) — must be
-    * treated as absent, not migrated (reading it would fail forever). */
-  private def hasLegacyDataFiles: Boolean =
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .exists(_.getName.endsWith(".parquet"))
-
   def merge(stage: DataFrame, spec: TableSpec): Unit = {
     recover()
     val spark = stage.sparkSession
@@ -322,12 +339,13 @@ final class BucketedParquetMergeTarget(path: String, buckets: Int = 64,
     val bucketOf = Skew.keyBucket(keys.map(col), buckets)
     val staged = stage.withColumn(Kb, bucketOf)
     val tmp = path + ".tmp"
-    if (!exists || !isBucketedLayout) {
-      // Create — or migrate an unbucketed target in one whole-table pass.
-      // A dir with neither layout (bucketed table fully emptied by
-      // deletes) is a create, not a migration.
+    if (!exists || !BucketLayout.isBucketed(path)) {
+      // Create — or migrate an unbucketed target (written by
+      // [[ParquetMergeTarget]]) in one whole-table pass. A dir with neither
+      // layout (bucketed table fully emptied by deletes) is a create, not a
+      // migration.
       val merged =
-        if (!exists || !hasLegacyDataFiles)
+        if (!exists || !BucketLayout.hasLegacyDataFiles(path))
           staged.filter(if (spec.skipDelete) lit(true) else !isDelete)
             .drop(metaCols: _*)
         else {
@@ -337,7 +355,7 @@ final class BucketedParquetMergeTarget(path: String, buckets: Int = 64,
           else MergeOps.merge(target, staged.drop(Kb), keys, isDelete, metaCols)
           m.withColumn(Kb, bucketOf)
         }
-      merged.write.mode(SaveMode.Overwrite).partitionBy(Kb).parquet(tmp)
+      BucketLayout.write(merged, tmp)
       DirSwap.swap(new java.io.File(tmp), new java.io.File(path),
         new java.io.File(path + ".old"))
     } else {
@@ -364,7 +382,7 @@ final class BucketedParquetMergeTarget(path: String, buckets: Int = 64,
           if (spec.skipDelete) MergeOps.mergeSkipDelete(target, staged, keys, metaCols)
           else MergeOps.merge(target, staged, keys, isDelete, metaCols)
         }
-      merged.write.mode(SaveMode.Overwrite).partitionBy(Kb).parquet(tmp)
+      BucketLayout.write(merged, tmp)
       // Swap only the touched buckets; a bucket whose merged output is
       // empty (all rows deleted) has no tmp dir and is removed. The `.old`
       // hops are SIBLINGS of the table directory — a crash mid-swap must

@@ -189,15 +189,6 @@ object CdcPipeline {
       Coerce(lwwDedup(norm, spec, format), spec)
     }
 
-  /** Delete-audit variant (save_delete / only_save_delete — ref
-    * redshift_sink.py:213-227,599-607): latest *delete* per key, deduped
-    * independently of the upsert stream. */
-  def deleteAuditBatch(batch: DataFrame, spec: TableSpec, format: CdcFormat,
-                       payload: Option[StructType] = None): Option[DataFrame] =
-    normalizedBatch(batch, spec, format, payload).map { norm =>
-      Coerce(lwwDedup(norm, spec, format, deleteOnly = true), spec)
-    }
-
   /** Per-table micro-batch outcome, for ops surfaces (lag dashboards, the
     * reference's batch-count prints — §2.4 A1). The staged frame is
     * persisted for the duration of its merge, so the count is a cache

@@ -18,6 +18,19 @@ class PipelineSpec extends SparkSuite {
 
   private def events = Tables.events(spark, sf("sf0.001"))
 
+  /** `kb_aws=N` directory name → its files (name, mtime). */
+  private def bucketFiles(table: String): Map[String, Set[(String, Long)]] =
+    new java.io.File(table).listFiles().filter(_.getName.startsWith("kb_aws="))
+      .map(d => d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet"))
+        .map(f => (f.getName, f.lastModified())).toSet)
+      .toMap
+
+  private def assertOneFilePerBucket(table: String): Unit = {
+    val files = bucketFiles(table)
+    assert(files.nonEmpty)
+    for ((dir, fs) <- files) assert(fs.size == 1, s"$dir holds ${fs.size} files")
+  }
+
   private val t0 = TableSpec("cdc_db", "t0", Seq("id"))
   private val t1 = TableSpec("cdc_db", "t1", Seq("id"))
 
@@ -448,10 +461,6 @@ class PipelineSpec extends SparkSuite {
     def bucketOf(ids: Seq[Long]): Set[Int] = ids.toDF("id")
       .select(pmod(xxhash64(col("id")), lit(nb.toLong)).cast("int").as("b"))
       .as[Int].collect().toSet
-    def fingerprint(): Map[String, Set[(String, Long)]] =
-      new java.io.File(s"$root/b").listFiles().filter(_.getName.startsWith("kb_aws="))
-        .map(d => d.getName -> d.listFiles().map(f => (f.getName, f.lastModified())).toSet)
-        .toMap
     def snapshots(): (Set[(Long, String)], Set[(Long, String)]) = (
       bt.snapshot(spark).select("id", "v").as[(Long, String)].collect().toSet,
       pt.snapshot(spark).select("id", "v").as[(Long, String)].collect().toSet)
@@ -459,14 +468,14 @@ class PipelineSpec extends SparkSuite {
     val s1 = stage((1 to 64).map(i => (i.toLong, s"v$i", "c")))
     bt.merge(s1, spec); pt.merge(s1, spec)
     assert(snapshots()._1 == snapshots()._2)
-    val before = fingerprint()
+    val before = bucketFiles(s"$root/b")
     assert(before.keySet.size == nb) // 64 keys cover all 8 buckets
 
     // touch two keys only: update id=1, delete id=2
     Thread.sleep(1100) // ensure mtime resolution cannot mask a rewrite
     val s2 = stage(Seq((1L, "v1x", "u"), (2L, "x", "d")))
     bt.merge(s2, spec); pt.merge(s2, spec)
-    val after = fingerprint()
+    val after = bucketFiles(s"$root/b")
     val touched = bucketOf(Seq(1L, 2L)).map(b => s"kb_aws=$b")
     for ((dir, files) <- before if !touched.contains(dir))
       assert(after(dir) == files, s"untouched $dir was rewritten")
@@ -486,6 +495,58 @@ class PipelineSpec extends SparkSuite {
     bt.merge(stage(victimIds.map(i => (i, "x", "d"))), spec)
     assert(!new java.io.File(s"$root/b/kb_aws=$victim").exists())
     assert(!bt.snapshot(spark).select("id").as[Long].collect().toSet.exists(victimIds.contains))
+  }
+
+  test("bucketed parquet target: every merge leaves one file per bucket (64 buckets), ≡ whole-table merge") {
+    import graft.sink.BucketedParquetMergeTarget
+    val root = Files.createTempDirectory("graft-layout").toString
+    val spec = TableSpec("d", "t", Seq("id"))
+    val bt = new BucketedParquetMergeTarget(s"$root/b")
+    val pt = new ParquetMergeTarget(s"$root/p")
+    def stage(ids: Range, v: String, op: Long => String) =
+      ids.map(i => (i.toLong, s"$v$i", op(i.toLong))).toDF("id", "v", "op_aws")
+    val batches = Seq(
+      stage(1 to 600, "a", _ => "c"),
+      stage(301 to 900, "b", i => if (i % 7 == 0) "d" else "u"),
+      stage(1 to 1000 by 3, "c", i => if (i % 5 == 0) "d" else "u"),
+      stage(450 to 1200, "d", _ => "u"))
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    for (b <- batches) {
+      assert(b.count() > shufflePartitions)
+      bt.merge(b, spec); pt.merge(b, spec)
+      assertOneFilePerBucket(s"$root/b")
+      assert(bt.snapshot(spark).select("id", "v").as[(Long, String)].collect().toSet ==
+        pt.snapshot(spark).select("id", "v").as[(Long, String)].collect().toSet)
+    }
+  }
+
+  test("bucketed parquet target compacts a multi-file legacy bucket when a merge touches it") {
+    import graft.sink.BucketedParquetMergeTarget
+    import graft.operators.Skew
+    val root = Files.createTempDirectory("graft-compact").toString
+    val spec = TableSpec("d", "t", Seq("id"))
+    val rows = (1 to 512).map(i => (i.toLong, s"v$i"))
+    // an unclustered bucketed write: every task opens a file per bucket
+    rows.toDF("id", "v").repartition(8)
+      .withColumn("kb_aws", Skew.keyBucket(Seq(col("id")), 64))
+      .write.partitionBy("kb_aws").parquet(s"$root/b")
+    val before = bucketFiles(s"$root/b")
+    assert(before.size == 64 && before.values.count(_.size > 1) > 32)
+    val bt = new BucketedParquetMergeTarget(s"$root/b")
+    val pt = new ParquetMergeTarget(s"$root/p")
+    pt.merge(rows.map { case (i, v) => (i, v, "c") }.toDF("id", "v", "op_aws"), spec)
+
+    Thread.sleep(1100) // ensure mtime resolution cannot mask a rewrite
+    val s2 = Seq((1L, "v1x", "u"), (2L, "x", "d"), (5000L, "new", "c")).toDF("id", "v", "op_aws")
+    bt.merge(s2, spec); pt.merge(s2, spec)
+    val touched = Seq(1L, 2L, 5000L).toDF("id")
+      .select(Skew.keyBucket(Seq(col("id")), 64)).as[Int].collect().map(b => s"kb_aws=$b").toSet
+    val after = bucketFiles(s"$root/b")
+    for (dir <- touched) assert(after(dir).size == 1, s"touched $dir not compacted")
+    for ((dir, files) <- before if !touched.contains(dir))
+      assert(after(dir) == files, s"untouched $dir was rewritten")
+    assert(bt.snapshot(spark).select("id", "v").as[(Long, String)].collect().toSet ==
+      pt.snapshot(spark).select("id", "v").as[(Long, String)].collect().toSet)
   }
 
   test("bucketed target under schema drift: untouched old-schema buckets keep their values") {
@@ -800,7 +861,7 @@ class PipelineSpec extends SparkSuite {
     }
     val nBuckets = 8
     // a key whose bucket differs from ids 2 and 4 — its bucket directory
-    // must stay mtime-identical when later batches touch only 2/4
+    // must stay mtime-identical when later batches touch only other buckets
     def bucketOf(id: Long): Int =
       Seq(id).toDF("id").select(graft.operators.Skew.keyBucket(Seq(col("id")), nBuckets))
         .as[Int].head()
@@ -816,15 +877,26 @@ class PipelineSpec extends SparkSuite {
       CdcPipeline.processBatch(lines.toDF("value"), cfg, FlinkDebeziumCdc, _ => target)
       ()
     }
-    val b1 = Seq(ev(2, 10, 1, 100, "u"), ev(4, 11, 7, 100, "u"), ev(lone, 12, 5, 100, "u"))
-    val b2 = Seq(ev(2, 20, 2, 200, "u"), ev(4, 21, 8, 200, "u"))
+    // b1 also carries keys in every bucket, spread over several stage
+    // partitions, so an unclustered write would leave many files per bucket
+    val bulk = (1000L until 1200L).map(id => ev(id, id, id % 3, 100, "u"))
+    val b1 = Seq(ev(2, 10, 1, 100, "u"), ev(4, 11, 7, 100, "u"), ev(lone, 12, 5, 100, "u")) ++ bulk
+    // b2 re-versions bulk keys too, but none in the lone key's bucket
+    val bulkAway = (1000L until 1200L).toDF("id")
+      .filter(graft.operators.Skew.keyBucket(Seq(col("id")), nBuckets) =!= bucketOf(lone))
+      .as[Long].collect().take(40)
+    val b2 = Seq(ev(2, 20, 2, 200, "u"), ev(4, 21, 8, 200, "u")) ++
+      bulkAway.map(id => ev(id, id + 1000, id % 3 + 1, 200, "u"))
     val b3 = Seq(ev(2, 30, 2, 300, "d"))
     run(whole, b1); run(bucketed, b1)
+    assertOneFilePerBucket(s"$dirB/t0")
     val loneDir = new java.io.File(s"$dirB/t0/kb_aws=${bucketOf(lone)}")
     assert(loneDir.exists())
     val before = loneDir.listFiles().map(f => (f.getName, f.lastModified())).toSet
     run(whole, b2); run(bucketed, b2)
+    assertOneFilePerBucket(s"$dirB/t0")
     run(whole, b3); run(bucketed, b3)
+    assertOneFilePerBucket(s"$dirB/t0")
     // identical histories through both targets
     def hist(d: String): Seq[Row] =
       spark.read.parquet(s"$d/t0").drop("kb_aws")
