@@ -10,29 +10,25 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   * The DataFrame API path ([[VectorExpressions.cosineSim]] etc.) builds
   * the expressions directly and needs no registration. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(VectorExpressions.vecDotDescriptor)
-    ext.injectFunction(VectorExpressions.cosineSimDescriptor)
-    ext.injectFunction(VectorExpressions.vecL2SqDescriptor)
-    ext.injectFunction(TextNormalizeExpression.textNormalizeDescriptor)
-    ext.injectFunction(TextNormalizeExpression.textFoldAccentsDescriptor)
-    ext.injectFunction(CharStatsExpression.charStatsDescriptor)
-    ext.injectFunction(MinhashSigExpression.minhashSigDescriptor)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.descriptors.foreach(ext.injectFunction)
 }
 
 object GraftExtensions {
+  /** Every SQL function this library provides, listed once for both
+    * registration routes. */
+  private val descriptors = Seq(
+    VectorExpressions.vecDotDescriptor, VectorExpressions.cosineSimDescriptor,
+    VectorExpressions.vecL2SqDescriptor,
+    TextNormalizeExpression.textNormalizeDescriptor,
+    TextNormalizeExpression.textFoldAccentsDescriptor,
+    CharStatsExpression.charStatsDescriptor,
+    MinhashSigExpression.minhashSigDescriptor)
+
   /** Post-hoc registration for sessions built without the extensions
     * config (e.g. a shared test session). */
-  def register(spark: SparkSession): Unit = {
-    Seq(VectorExpressions.vecDotDescriptor, VectorExpressions.cosineSimDescriptor,
-        VectorExpressions.vecL2SqDescriptor,
-        TextNormalizeExpression.textNormalizeDescriptor,
-        TextNormalizeExpression.textFoldAccentsDescriptor,
-        CharStatsExpression.charStatsDescriptor,
-        MinhashSigExpression.minhashSigDescriptor)
-      .foreach { case (id, info, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-      }
-  }
+  def register(spark: SparkSession): Unit =
+    descriptors.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 }

@@ -146,9 +146,10 @@ final case class JobConfig(
     s3Endpoint: Option[String] = None,
     /** Staged-COPY bulk-load path (S5 production form — ref
       * `redshift_tmpdir`/`redshift_iam_role`/`aws_region`/`tempformat`,
-      * config/job-ec2.properties:16,26-27): when `redshift_tmpdir` is
-      * set, a jdbc: sink loads staging via part files + manifest + COPY
-      * ([[graft.sink.StagedCopyMergeSink]]) instead of batch INSERT.
+      * config/job-ec2.properties:16,26-27): a jdbc: sink is always the
+      * one warehouse sink ([[graft.sink.WarehouseMergeSink]]); when
+      * `redshift_tmpdir` is set it loads staging via part files +
+      * manifest + COPY, otherwise through Spark's JDBC writer.
       * `copy_mode=statement` issues the COPY text verbatim (a
       * COPY-capable warehouse); the default `replay` emulates COPY
       * through a distributed re-read for engines without it. */

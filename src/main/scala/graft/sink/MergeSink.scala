@@ -2,18 +2,13 @@ package graft.sink
 
 import graft.config.TableSpec
 import graft.operators.{MergeOps, Skew}
-import graft.schema.SchemaEvolution
-import graft.schema.SchemaEvolution.ColumnDef
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.sql.{Connection, DriverManager}
-import java.util.Properties
 
 /** Keyed-merge sinks. The reference merges through Redshift (staging table
   * + `DELETE USING` / `INSERT SELECT` in one transaction —
   * cdc_util/redshift_sink.py:465-547); we provide the same algebra against
-  * four parquet targets — {whole-table, bucketed} × {type-1, SCD2} — and
-  * a JDBC sink:
+  * four parquet targets — {whole-table, bucketed} × {type-1, SCD2}:
   *
   *  - [[ParquetMergeTarget]] — pure-Spark merge into a parquet "table";
   *    lets every merge semantics be oracle-tested with no warehouse.
@@ -22,13 +17,13 @@ import java.util.Properties
   *  - [[Scd2ParquetTarget]] / [[BucketedScd2Target]] — type-2 history
   *    (every version with its validity interval), whole-table and
   *    bucketed.
-  *  - [[JdbcMergeSink]] — staging-table batch insert (Spark's executor-side
-  *    JDBC writer) + a single driver-side transaction running portable
-  *    ANSI merge SQL (`DELETE WHERE EXISTS` + `INSERT SELECT`), with
-  *    auto-create, add/drop-column schema evolution, staging TRUNCATE
-  *    (not drop — catalog churn with hundreds of tables, ref README.md:46)
-  *    and the reference's retry-once-after-staging-reset policy
-  *    (redshift_sink.py:528-547).
+  *
+  * The warehouse itself is the one JDBC sink, [[WarehouseMergeSink]]
+  * (StagedCopySink.scala): a staging-table load through a pluggable
+  * [[CopyExecutor]] + one transaction of portable ANSI merge SQL
+  * (`DELETE WHERE EXISTS` + `INSERT SELECT`), with auto-create,
+  * add/drop-column schema evolution and the reference's
+  * retry-once-after-staging-reset policy (redshift_sink.py:528-547).
   */
 trait MergeTarget {
   /** Merge a deduped stage batch (one row per key, carrying `op_aws`). */
@@ -392,148 +387,6 @@ final class BucketedParquetMergeTarget(path: String, buckets: Int = 64,
           new java.io.File(s"$path.old-$Kb=$b"), allowMissingSrc = true)
       }
       DirSwap.rmTree(new java.io.File(tmp))
-    }
-  }
-}
-
-/** JDBC merge sink: the warehouse path. One instance per table task, with
-  * its own connection lifecycle (ref SURVEY.md §2.10 C3). */
-final class JdbcMergeSink(url: String, connProps: Properties = new Properties(),
-                          maxVarchar: Int = 65535) {
-
-  /** Clamp generated VARCHAR widths to the engine's limit (Redshift allows
-    * 65535; Derby tops out at 32672). */
-  private def clampVarchar(ddl: String): String =
-    "VARCHAR\\((\\d+)\\)".r.replaceAllIn(ddl, m =>
-      s"VARCHAR(${math.min(m.group(1).toInt, maxVarchar)})")
-
-  private def withConnection[A](f: Connection => A): A = {
-    val conn = DriverManager.getConnection(url, connProps)
-    try f(conn) finally conn.close()
-  }
-
-  /** Catalog columns of `name` on an open connection: exact name first,
-    * then the engine's upper-cased fold. A `schema.table` name probes
-    * with the schema as the metadata pattern (the reference always
-    * schema-qualifies its pg_table_def lookups). */
-  private def lookupColumns(conn: Connection, name: String): List[ColumnDef] = {
-    val (schemaPat, tablePat) = name.split("\\.", 2) match {
-      case Array(s, t) => (s, t)
-      case _ => (null, name)
-    }
-    def one(s: String, t: String): List[ColumnDef] = {
-      val rs = conn.getMetaData.getColumns(null, s, t, null)
-      Iterator.continually(rs).takeWhile(_.next())
-        .map(r => ColumnDef(r.getString("COLUMN_NAME").toLowerCase, r.getString("TYPE_NAME")))
-        .toList
-    }
-    one(schemaPat, tablePat) match {
-      case Nil => one(if (schemaPat == null) null else schemaPat.toUpperCase,
-        tablePat.toUpperCase)
-      case c => c
-    }
-  }
-
-  /** Columns of `table` from JDBC metadata, None if the table is absent. */
-  def catalogColumns(table: String): Option[Seq[ColumnDef]] = withConnection { conn =>
-    lookupColumns(conn, table) match {
-      case Nil => None
-      case c => Some(c)
-    }
-  }
-
-  private def execute(conn: Connection, sql: String): Unit = {
-    val st = conn.createStatement()
-    try st.execute(sql) finally st.close()
-  }
-
-  /** Merge `stage` (deduped, one row per key, op in `op_aws`) into
-    * `spec.resolvedTarget`:
-    *  1. auto-create target / evolve schema (unless `ignore_ddl`);
-    *  2. load staging table via Spark's distributed JDBC writer;
-    *  3. one transaction: DELETE matched keys, INSERT non-deletes,
-    *     TRUNCATE staging;
-    *  4. on failure: drop staging, retry once (schema-drifted staging
-    *     leftovers are the usual cause, as in the reference).
-    */
-  private def q(id: String): String = "\"" + id + "\""
-
-  def writeBatch(stage0: DataFrame, spec: TableSpec): Unit = {
-    val target = spec.resolvedTarget
-    val staging = s"${target}_stage_aws"
-    val dataCols = stage0.columns.filterNot(Seq("ts_ms_aws", "idx_aws").contains)
-    val stage1 = stage0.select(dataCols.map(col): _*)
-    // ignore_ddl: the user manages DDL; cast the batch to the existing
-    // catalog's types instead of evolving the table (ref
-    // redshift_schema_evolution.py:97-155; README.md:107-115).
-    val stage = if (!spec.ignoreDdl) stage1 else {
-      val catalog = catalogColumns(target).getOrElse(throw new IllegalStateException(
-        s"ignore_ddl=true but target table $target does not exist"))
-      val present = stage1.columns.map(_.toLowerCase).toSet
-      val castCols = catalog.filter(c => present.contains(c.name.toLowerCase))
-        .map(c => col(c.name).cast(SchemaEvolution.sqlToSpark(c.sqlType)).as(c.name))
-      stage1.select(castCols :+ col("op_aws"): _*)
-    }
-    def attempt(dropStagingFirst: Boolean): Unit = {
-      withConnection { conn =>
-        if (dropStagingFirst)
-          try execute(conn, s"DROP TABLE $staging") catch { case _: Exception => }
-        ensureTargetSchema(conn, stage.drop("op_aws"), spec)
-      }
-      stage.write.mode(SaveMode.Overwrite)
-        .option("truncate", "true") // reuse staging table when shape matches
-        // `op_aws` is compared in the merge SQL — force a comparable type
-        // (dialects like Derby map StringType to CLOB, which cannot equal a
-        // literal).
-        .option("createTableColumnTypes", "op_aws VARCHAR(8)")
-        .jdbc(url, staging, connProps)
-      withConnection { conn =>
-        conn.setAutoCommit(false)
-        try {
-          // Table names stay unquoted (engines upper-fold them consistently);
-          // column names are quoted lower-case to match Spark's JDBC writer.
-          // mergeKeys, not primaryKey: a Mongo spec with no configured key
-          // merges on the extracted doc_id, same as the parquet targets.
-          val on = spec.mergeKeys
-            .map(k => s"$target.${q(k)} = $staging.${q(k)}").mkString(" AND ")
-          // Delete phase always clears matched keys; with skip_delete the
-          // "deleted" row is then re-inserted as a regular upsert.
-          execute(conn,
-            s"DELETE FROM $target WHERE EXISTS (SELECT 1 FROM $staging WHERE $on)")
-          val insertCols = stage.columns.filterNot(_ == "op_aws").map(q)
-          val opPredicate = if (spec.skipDelete) "1=1" else s"${q("op_aws")} <> 'd'"
-          execute(conn,
-            s"INSERT INTO $target (${insertCols.mkString(", ")}) " +
-              s"SELECT ${insertCols.mkString(", ")} FROM $staging WHERE $opPredicate")
-          execute(conn, s"TRUNCATE TABLE $staging")
-          conn.commit()
-        } catch {
-          case e: Exception => conn.rollback(); throw e
-        } finally conn.setAutoCommit(true)
-      }
-    }
-    try attempt(dropStagingFirst = false)
-    catch { case _: Exception => attempt(dropStagingFirst = true) }
-  }
-
-  /** Create the target if missing; otherwise diff + ALTER (add/drop), the
-    * reference's auto-evolution (redshift_schema_evolution.py:188-241).
-    * With `ignore_ddl`, neither create nor alter runs. */
-  private def ensureTargetSchema(conn: Connection, data: DataFrame, spec: TableSpec): Unit = {
-    if (spec.ignoreDdl) return
-    val target = spec.resolvedTarget
-    val existing = lookupColumns(conn, target)
-    if (existing.isEmpty) {
-      // Plain CREATE (existence already checked): Derby and several other
-      // engines lack IF NOT EXISTS. Identifiers stay quoted (lower-case) so
-      // the merge SQL and Spark's quoted JDBC writer agree on names.
-      execute(conn, clampVarchar(SchemaEvolution.createTableDdl(target, data.schema, Nil,
-        ifNotExists = false)))
-    } else {
-      val (adds, drops) = SchemaEvolution.diff(data.schema, existing)
-      SchemaEvolution.alterDdl(target, adds, drops)
-        .map(clampVarchar)
-        .foreach(execute(conn, _))
     }
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.config.{JobConfig, TableSpec}
 import graft.envelope.CdcFormat
-import graft.sink.{AggViewTarget, BucketedParquetMergeTarget, BucketedScd2Target, JdbcMergeSink, MergeTarget, RedshiftSql, ReplayCopyExecutor, StagedCopyMergeSink, StatementCopyExecutor}
+import graft.sink.{AggViewTarget, BucketedParquetMergeTarget, BucketedScd2Target, JdbcWriteExecutor, MergeTarget, RedshiftSql, ReplayCopyExecutor, StatementCopyExecutor, WarehouseMergeSink}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The single app driver, replacing the reference's three near-identical
@@ -12,8 +12,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Usage: `runMain graft.streaming.CdcApp <config.properties> [jdbcUrl]`
   *  - config: the reference's property names (`kafka_broker`, `topic`,
   *    `cdc_format`, `sync_table_list`, ...; see JobConfig).
-  *  - sink: `jdbc:` URL → [[JdbcMergeSink]] per table; otherwise treated
-  *    as a directory for parquet merge targets (lakehouse/test mode).
+  *  - sink: `jdbc:` URL → the one warehouse sink, [[WarehouseMergeSink]],
+  *    loading staging by staged COPY when `redshift_tmpdir` is set and by
+  *    Spark's JDBC writer otherwise; any other value is treated as a
+  *    directory for parquet merge targets (lakehouse/test mode).
   */
 object CdcApp {
 
@@ -50,21 +52,17 @@ object CdcApp {
       // Derby (the sandbox warehouse) tops out at 32672.
       val maxVarchar = if (url.startsWith("jdbc:derby")) 32672 else 65535
       // redshift_tmpdir configured → the staged-COPY bulk path (part
-      // files + manifest + COPY); otherwise the batch-INSERT stand-in.
-      val write: (DataFrame, TableSpec) => Unit = cfg.redshiftTmpdir match {
+      // files + manifest + COPY); otherwise Spark's JDBC writer loads
+      // staging directly.
+      val executor = cfg.redshiftTmpdir match {
         case Some(tmpdir) =>
-          val executor =
-            if (cfg.copyMode.equalsIgnoreCase("statement")) new StatementCopyExecutor()
-            else new ReplayCopyExecutor(spark, url, props)
-          val copy = new StagedCopyMergeSink(url, props, tmpdir, executor,
-            RedshiftSql.CopyOptions(iamRole = cfg.iamRole, region = cfg.awsRegion,
-              maxError = cfg.maxError, tempformat = cfg.tempformat),
-            maxVarchar = maxVarchar)
-          copy.writeBatch
-        case None =>
-          val jdbc = new JdbcMergeSink(url, props, maxVarchar = maxVarchar)
-          jdbc.writeBatch
+          val opts = RedshiftSql.CopyOptions(iamRole = cfg.iamRole, region = cfg.awsRegion,
+            maxError = cfg.maxError, tempformat = cfg.tempformat)
+          if (cfg.copyMode.equalsIgnoreCase("statement")) new StatementCopyExecutor(tmpdir, opts)
+          else new ReplayCopyExecutor(spark, url, props, tmpdir, opts)
+        case None => new JdbcWriteExecutor(url, props)
       }
+      val sink = new WarehouseMergeSink(url, props, executor, maxVarchar = maxVarchar)
       // redshift_schema qualifies every target (and thus its staging
       // table) — ref passes it to all catalog probes and DDL.
       val qualify: TableSpec => TableSpec =
@@ -72,7 +70,7 @@ object CdcApp {
         else s => s.copy(targetTable = Some(s"${cfg.redshiftSchema}.${s.resolvedTarget}"))
       spec0 => new MergeTarget {
         private val spec = qualify(spec0)
-        def merge(stage: DataFrame, s: TableSpec): Unit = write(stage, qualify(s))
+        def merge(stage: DataFrame, s: TableSpec): Unit = sink.writeBatch(stage, qualify(s))
         def snapshot(sp: SparkSession): DataFrame = {
           val r = sp.read.format("jdbc").option("url", url)
             .option("dbtable", spec.resolvedTarget)

@@ -3,7 +3,7 @@ package graft
 import graft.config.{JobConfig, TableSpec}
 import graft.envelope.FlinkDebeziumCdc
 import graft.operators.Dedup
-import graft.sink.{JdbcMergeSink, MergeTarget, ParquetMergeTarget}
+import graft.sink.{CopyExecutor, JdbcWriteExecutor, MergeTarget, ParquetMergeTarget, ReplayCopyExecutor, WarehouseMergeSink}
 import graft.sources.CdcGen
 import graft.streaming.CdcPipeline
 import org.apache.spark.sql.{DataFrame, Row}
@@ -30,6 +30,12 @@ class PipelineSpec extends SparkSuite {
     assert(files.nonEmpty)
     for ((dir, fs) <- files) assert(fs.size == 1, s"$dir holds ${fs.size} files")
   }
+
+  /** The warehouse sink over a Derby `url`, staging loaded by Spark's
+    * JDBC writer unless another executor is given. */
+  private def warehouseSink(url: String,
+      executor: String => CopyExecutor = u => new JdbcWriteExecutor(u, new java.util.Properties())) =
+    new WarehouseMergeSink(url, executor = executor(url), maxVarchar = 32672)
 
   private val t0 = TableSpec("cdc_db", "t0", Seq("id"))
   private val t1 = TableSpec("cdc_db", "t1", Seq("id"))
@@ -191,7 +197,7 @@ class PipelineSpec extends SparkSuite {
   test("schema cache: unchanged second batch runs no inference; drift probe triggers ALTER") {
     val db = Files.createTempDirectory("graft-derby5").toString + "/db"
     val url = s"jdbc:derby:$db;create=true"
-    val jdbc = new JdbcMergeSink(url, maxVarchar = 32672)
+    val jdbc = warehouseSink(url)
     val cache = new graft.schema.SchemaCache(probeEvery = 2)
     val cfg = JobConfig(tables = Seq(t0), threadMaxWorkers = 1, batchTimeoutMinutes = 5)
     def sinkFor(spec: TableSpec): MergeTarget = new MergeTarget {
@@ -656,9 +662,10 @@ class PipelineSpec extends SparkSuite {
     assert(got == Map(2L -> Some(8L), 4L -> None))
   }
 
-  test("jdbc sink: auto-create, merge, schema evolution, idempotent replay") {
+  /** One warehouse sink, whichever executor loads its staging table. */
+  private def jdbcSinkRoundTrip(executor: String => CopyExecutor): Unit = {
     val db = Files.createTempDirectory("graft-derby").toString + "/db"
-    val sink = new JdbcMergeSink(s"jdbc:derby:$db;create=true", maxVarchar = 32672)
+    val sink = warehouseSink(s"jdbc:derby:$db;create=true", executor)
     val spec = TableSpec("cdc_db", "tgt", Seq("id"))
     val stage1 = Seq((1L, "a", "c"), (2L, "b", "c")).toDF("id", "v", "op_aws")
     sink.writeBatch(stage1, spec)
@@ -679,11 +686,35 @@ class PipelineSpec extends SparkSuite {
     sink.writeBatch(stage3, spec)
     val cols = sink.catalogColumns("tgt").get.map(_.name)
     assert(cols.contains("extra"))
+    // Mongo family (no configured key: merges on doc_id) over two
+    // batches: staging is dropped after each, the next load re-creates it
+    val mongo = TableSpec("cdc_db", "mg", Nil)
+    def readMongo(): Map[Long, String] =
+      spark.read.format("jdbc").option("url", s"jdbc:derby:$db")
+        .option("dbtable", "mg").load()
+        .select(col("doc_id").cast("long"), col("v")).as[(Long, String)].collect().toMap
+    sink.writeBatch(Seq((1L, "a", "c"), (2L, "b", "c")).toDF("doc_id", "v", "op_aws"), mongo)
+    assert(readMongo() == Map(1L -> "a", 2L -> "b"))
+    assert(sink.catalogColumns("mg_stage_aws").isEmpty)
+    sink.writeBatch(Seq((2L, "x", "d"), (3L, "c", "u")).toDF("doc_id", "v", "op_aws"), mongo)
+    assert(readMongo() == Map(1L -> "a", 3L -> "c"))
+    assert(sink.catalogColumns("mg_stage_aws").isEmpty)
+    assert(sink.lastTransactionSql.exists(_.contains("drop table mg_stage_aws")))
+  }
+
+  test("jdbc sink: auto-create, merge, schema evolution, idempotent replay") {
+    jdbcSinkRoundTrip(url => new JdbcWriteExecutor(url, new java.util.Properties()))
+  }
+
+  test("jdbc sink: auto-create, merge, schema evolution, idempotent replay (replay-COPY load)") {
+    val tempDir = Files.createTempDirectory("graft-derby-copy").toString
+    jdbcSinkRoundTrip(url =>
+      new ReplayCopyExecutor(spark, url, new java.util.Properties(), tempDir))
   }
 
   test("jdbc sink ignore_ddl: casts to catalog, never alters the table") {
     val db = Files.createTempDirectory("graft-derby2").toString + "/db"
-    val sink = new JdbcMergeSink(s"jdbc:derby:$db;create=true", maxVarchar = 32672)
+    val sink = warehouseSink(s"jdbc:derby:$db;create=true")
     val spec = TableSpec("cdc_db", "fixed", Seq("id"))
     sink.writeBatch(Seq((1L, "a", "c")).toDF("id", "v", "op_aws"), spec)
     val before = sink.catalogColumns("fixed").get.map(_.name)
@@ -700,7 +731,7 @@ class PipelineSpec extends SparkSuite {
   test("jdbc sink retry-once: schema-drifted staging leftover is dropped and retried") {
     val db = Files.createTempDirectory("graft-derby4").toString + "/db"
     val url = s"jdbc:derby:$db;create=true"
-    val sink = new JdbcMergeSink(url, maxVarchar = 32672)
+    val sink = warehouseSink(url)
     // Poison the staging table with an incompatible leftover shape (the
     // reference's retry-once trigger: schema changed between batches).
     val conn = java.sql.DriverManager.getConnection(url)
@@ -720,7 +751,7 @@ class PipelineSpec extends SparkSuite {
   test("concurrent table tasks into one JDBC warehouse (C1+C3+S5 topology)") {
     val db = Files.createTempDirectory("graft-derby3").toString + "/db"
     val url = s"jdbc:derby:$db;create=true"
-    val jdbc = new JdbcMergeSink(url, maxVarchar = 32672)
+    val jdbc = warehouseSink(url)
     val specs = Seq(t0, t1)
     val cfg = JobConfig(tables = specs, threadMaxWorkers = 2, batchTimeoutMinutes = 5)
     def sinkFor(spec: TableSpec): MergeTarget = new MergeTarget {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.config.TableSpec
-import graft.sink.{CopyStage, RedshiftSql, ReplayCopyExecutor, StagedCopyMergeSink}
+import graft.sink.{CopyStage, RedshiftSql, ReplayCopyExecutor, WarehouseMergeSink}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -26,13 +26,14 @@ class StagedCopySpec extends SparkSuite {
   private val spec = TableSpec(db = "d", table = "t_copy", primaryKey = Seq("id"))
 
   private def mkSink(db: String, tempDir: String, tempformat: String = "CSV GZIP",
-                     keepStaged: Boolean = false): StagedCopyMergeSink = {
+                     keepStaged: Boolean = false): WarehouseMergeSink = {
     val url = s"jdbc:derby:$db;create=true"
-    new StagedCopyMergeSink(url, new Properties(), tempDir,
-      new ReplayCopyExecutor(spark, url, new Properties()),
-      RedshiftSql.CopyOptions(iamRole = "arn:aws:iam::0:role/r", region = "us-east-1",
-        maxError = 0L, tempformat = tempformat),
-      maxVarchar = 32672, keepStaged = keepStaged)
+    new WarehouseMergeSink(url, new Properties(),
+      new ReplayCopyExecutor(spark, url, new Properties(), tempDir,
+        RedshiftSql.CopyOptions(iamRole = "arn:aws:iam::0:role/r", region = "us-east-1",
+          maxError = 0L, tempformat = tempformat),
+        keepStaged = keepStaged),
+      maxVarchar = 32672)
   }
 
   private def readTarget(db: String): Seq[(Long, String)] =
@@ -367,29 +368,28 @@ class StagedCopySpec extends SparkSuite {
     // true): a real warehouse COPY can only load into an EXISTING table,
     // so the executor first proves the table is queryable, then loads the
     // staged parquet through plain INSERTs on the merge connection.
+    val tempDir = tmp("graft-copy-precreate-tmp")
     val exec = new graft.sink.CopyExecutor {
-      def copyInto(conn: java.sql.Connection, stagingTable: String,
-                   batch: CopyStage.StagedBatch,
-                   schema: org.apache.spark.sql.types.StructType,
-                   opts: RedshiftSql.CopyOptions): Unit = {
-        val st = conn.createStatement()
-        try st.executeQuery(s"SELECT COUNT(*) FROM $stagingTable")
-        finally st.close() // throws if the sink failed to pre-create
-        copies += 1
-        val rows = spark.read.schema(schema).parquet(batch.files: _*).collect()
-        val cols = schema.fieldNames.map("\"" + _ + "\"").mkString(",")
-        val ph = schema.fieldNames.map(_ => "?").mkString(",")
-        val ps = conn.prepareStatement(
-          s"INSERT INTO $stagingTable ($cols) VALUES ($ph)")
-        try rows.foreach { r =>
-          schema.fieldNames.indices.foreach(i => ps.setObject(i + 1, r.get(i)))
-          ps.executeUpdate()
-        } finally ps.close()
-      }
+      def load(conn: java.sql.Connection, stagingTable: String,
+               stage: DataFrame): Unit =
+        CopyStage.withStaged(stage, tempDir, "PARQUET", keep = false) { batch =>
+          val schema = stage.schema
+          val st = conn.createStatement()
+          try st.executeQuery(s"SELECT COUNT(*) FROM $stagingTable")
+          finally st.close() // throws if the sink failed to pre-create
+          copies += 1
+          val rows = spark.read.schema(schema).parquet(batch.files: _*).collect()
+          val cols = schema.fieldNames.map("\"" + _ + "\"").mkString(",")
+          val ph = schema.fieldNames.map(_ => "?").mkString(",")
+          val ps = conn.prepareStatement(
+            s"INSERT INTO $stagingTable ($cols) VALUES ($ph)")
+          try rows.foreach { r =>
+            schema.fieldNames.indices.foreach(i => ps.setObject(i + 1, r.get(i)))
+            ps.executeUpdate()
+          } finally ps.close()
+        }
     }
-    val sink = new StagedCopyMergeSink(url, new Properties(),
-      tmp("graft-copy-precreate-tmp"), exec,
-      RedshiftSql.CopyOptions(tempformat = "PARQUET"), maxVarchar = 32672)
+    val sink = new WarehouseMergeSink(url, new Properties(), exec, maxVarchar = 32672)
     def mongoBatch(rows: Seq[(Long, String, String)]) =
       rows.toDF("doc_id", "name", "op_aws")
     val mongoSpec = spec.copy(primaryKey = Nil)
@@ -410,9 +410,61 @@ class StagedCopySpec extends SparkSuite {
     assert(new java.io.File(staged.files.head).delete())
     val url = s"jdbc:derby:${tmp("graft-copy-missing-db")}/db;create=true"
     val ex = intercept[IllegalStateException] {
-      new ReplayCopyExecutor(spark, url, new Properties())
-        .copyInto(null, "s", staged, batch(Nil).schema, RedshiftSql.CopyOptions())
+      new ReplayCopyExecutor(spark, url, new Properties(), dir)
+        .replay(staged, batch(Nil).schema)
     }
     assert(ex.getMessage.contains("mandatory"))
+  }
+
+  test("retry-once: when both attempts fail, the rethrown error carries the first") {
+    val db = tmp("graft-copy-retry2") + "/db"
+    val url = s"jdbc:derby:$db;create=true"
+    // A user-managed target whose `name` column cannot take the batch's
+    // strings: every INSERT-SELECT fails, so the retry fails too.
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      try st.execute("""CREATE TABLE t_copy ("id" BIGINT, "name" INTEGER)""")
+      finally st.close()
+    } finally conn.close()
+    val ex = intercept[java.sql.SQLException] {
+      mkSink(db, tmp("graft-copy-tmp-retry2")).writeBatch(batch(Seq((1L, "a", "u"))), spec)
+    }
+    val suppressed = ex.getSuppressed.toSeq
+    assert(suppressed.size == 1, suppressed)
+    assert(suppressed.head.isInstanceOf[java.sql.SQLException] && (suppressed.head ne ex))
+    assert(readTarget(db).isEmpty)
+  }
+
+  test("a column name containing a double quote fails the batch before any DDL") {
+    import spark.implicits._
+    val db = tmp("graft-copy-quote") + "/db"
+    val sink = mkSink(db, tmp("graft-copy-tmp-quote"))
+    sink.writeBatch(batch(Seq((1L, "a", "u"))), spec)
+    val before = sink.catalogColumns("t_copy")
+    val evil = "a\" INTEGER, \"b"
+    val ex = intercept[IllegalArgumentException] {
+      sink.writeBatch(Seq((2L, "b", 7L, "u")).toDF("id", "name", evil, "op_aws"), spec)
+    }
+    assert(ex.getMessage.contains("t_copy") && ex.getMessage.contains(evil), ex.getMessage)
+    assert(sink.catalogColumns("t_copy") == before)
+    assert(readTarget(db) == Seq((1L, "a")))
+  }
+
+  test("sinkFactory without redshift_tmpdir loads staging through Spark's JDBC writer") {
+    val cfg = graft.config.JobConfig.fromProperties(
+      """kafka_broker=k:9092
+        |topic=t
+        |""".stripMargin)
+    assert(cfg.redshiftTmpdir.isEmpty)
+    val db = tmp("graft-copy-factory-direct") + "/db"
+    val target = graft.streaming.CdcApp.sinkFactory(spark,
+      s"jdbc:derby:$db;create=true", cfg)(spec)
+    target.merge(batch(Seq((1L, "a", "u"), (2L, "b", "u"))), spec)
+    target.merge(batch(Seq((2L, "B", "u"), (1L, "a", "d"), (3L, "c", "u"))), spec)
+    val snap = target.snapshot(spark).collect()
+      .map(r => (r.getLong(r.fieldIndex("id")), r.getString(r.fieldIndex("name"))))
+      .toSeq.sortBy(_._1)
+    assert(snap == Seq((2L, "B"), (3L, "c")))
   }
 }
