@@ -43,9 +43,10 @@ final case class TableSpec(
     /** Keep a type-2 history target (every version with its
       * [valid_from, valid_to) interval — [[graft.operators.Scd2]])
       * instead of the reference's type-1 last-image upsert. Honored by
-      * the parquet sink factory ([[graft.streaming.CdcApp.sinkFactory]] →
-      * [[graft.sink.Scd2ParquetTarget]]); `skip_delete` composes (a
-      * delete then never closes the open version). */
+      * the parquet sink factory ([[graft.streaming.CdcApp.sinkFactory]]),
+      * whose [[graft.sink.ParquetMergeTarget]] folds the batch as SCD2
+      * when this is set; `skip_delete` composes (a delete then never
+      * closes the open version). */
     scd2History: Boolean = false,
     /** Maintain a (group-keys → count/sum/sum-of-squares) rollup NEXT TO
       * the merged table, updated incrementally from each micro-batch's

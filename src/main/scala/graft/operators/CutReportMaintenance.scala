@@ -592,10 +592,15 @@ object CutReportMaintenance {
       // writer lock was released — a retrying writer computing the same
       // nextV could then race it on the same segment directory. With
       // the full barrier, no state-dir write can outlive this call.
+      // Fatal errors are captured too: `Try` passes an OutOfMemoryError
+      // through, its future never completes, and the barrier would hang
+      // forever while holding the writer lock.
       try {
         val results = scala.concurrent.Await.result(
           scala.concurrent.Future.sequence(
-            tasks.map(t => scala.concurrent.Future(scala.util.Try(t())))),
+            tasks.map(t => scala.concurrent.Future(
+              try scala.util.Success(t())
+              catch { case e: Throwable => scala.util.Failure[Unit](e) }))),
           scala.concurrent.duration.Duration.Inf)
         results.foreach(_.get)
       } finally pool.shutdown()

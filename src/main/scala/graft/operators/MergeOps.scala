@@ -80,7 +80,7 @@ object MergeOps {
     *
     * Shape: union + re-aggregate — partial aggregation collapses both
     * sides map-side, the exchange carries one row per touched key, and
-    * under a key-bucketed target ([[graft.sink.BucketedParquetMergeTarget]])
+    * under a key-bucketed target ([[graft.sink.ParquetMergeTarget]])
     * only touched buckets rewrite. A full-outer-join formulation builds
     * the same result with a join it doesn't need.
     *

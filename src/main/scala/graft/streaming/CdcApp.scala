@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.config.{JobConfig, TableSpec}
 import graft.envelope.CdcFormat
-import graft.sink.{AggViewTarget, BucketedParquetMergeTarget, BucketedScd2Target, JdbcWriteExecutor, MergeTarget, RedshiftSql, ReplayCopyExecutor, StatementCopyExecutor, WarehouseMergeSink}
+import graft.sink.{AggViewTarget, JdbcWriteExecutor, MergeTarget, ParquetMergeTarget, RedshiftSql, ReplayCopyExecutor, StatementCopyExecutor, WarehouseMergeSink}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The single app driver, replacing the reference's three near-identical
@@ -15,7 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - sink: `jdbc:` URL → the one warehouse sink, [[WarehouseMergeSink]],
   *    loading staging by staged COPY when `redshift_tmpdir` is set and by
   *    Spark's JDBC writer otherwise; any other value is treated as a
-  *    directory for parquet merge targets (lakehouse/test mode).
+  *    directory of bucketed [[ParquetMergeTarget]]s, one per table
+  *    (lakehouse/test mode).
   */
 object CdcApp {
 
@@ -82,12 +83,11 @@ object CdcApp {
     } else {
       val sinks = scala.collection.concurrent.TrieMap.empty[String, MergeTarget]
       // Bucketed layout: per-batch I/O is O(touched buckets), not O(table).
+      // The target takes its merge algebra from each batch's spec:
       // `scd2_history` specs keep a type-2 version history instead of the
       // type-1 last-image table.
       spec => sinks.getOrElseUpdate(spec.resolvedTarget, {
-        val base: MergeTarget =
-          if (spec.scd2History) new BucketedScd2Target(s"$sinkSpec/${spec.resolvedTarget}")
-          else new BucketedParquetMergeTarget(s"$sinkSpec/${spec.resolvedTarget}")
+        val base = new ParquetMergeTarget(s"$sinkSpec/${spec.resolvedTarget}")
         // `agg_view_keys`/`agg_view_value` specs also maintain a moments
         // rollup next to the merged table (AggViewTarget decorator).
         // Half-configured specs fail fast (a silently missing rollup is

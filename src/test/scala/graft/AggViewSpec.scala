@@ -125,7 +125,7 @@ class AggViewSpec extends SparkSuite {
       mem.addData(h2.toIndexedSeq); q.processAllAvailable()
     } finally q.stop()
     val target = sinkFor(t0).asInstanceOf[AggViewTarget]
-    val merged = spark.read.parquet(s"$dir/t0")
+    val merged = target.snapshot(spark)
     val want = merged.groupBy(col("k"))
       .agg(count(lit(1)).as("cnt"), sum(col("event_id")).as("sumv"))
       .collect().map(r => r.getAs[Number](0).intValue() ->
@@ -157,6 +157,20 @@ class AggViewSpec extends SparkSuite {
     val t = new AggViewTarget(plain, s"$dir/view")
     t.merge(batch(Seq((2L, "b", 7L, "u"), (3L, "a", 1L, "c"))), spec)
     assert(view(t) === Map("a" -> (2L, 11L, 101L), "b" -> (1L, 7L, 49L)))
+    assert(view(t) === recompute(t))
+  }
+
+  test("a view over a table whose every key was deleted accepts the next batch") {
+    val dir = tmp("graft-aggview-emptied")
+    val t = graft.streaming.CdcApp.sinkFactory(spark, dir)(spec).asInstanceOf[AggViewTarget]
+    t.merge(batch(Seq((1L, "a", 10L, "c"), (2L, "b", 5L, "c"))), spec)
+    t.merge(batch(Seq((1L, "a", 10L, "d"), (2L, "b", 5L, "d"))), spec)
+    assert(view(t).isEmpty && t.snapshot(spark).count() == 0)
+    val b3 = batch(Seq((3L, "a", 7L, "c")))
+    t.merge(b3, spec)
+    assert(view(t) === Map("a" -> (1L, 7L, 49L)))
+    assert(view(t) === recompute(t))
+    t.merge(b3, spec) // replay
     assert(view(t) === recompute(t))
   }
 

@@ -769,6 +769,27 @@ class CutReportMaintenanceSpec extends SparkSuite {
     assert(slowDone.get() == 4,
       s"only ${slowDone.get()}/4 sibling landings had completed when " +
         "the failure escaped — a straggler write outlived the call")
+    // A fatal error (which `Try` does not catch) must complete its task
+    // too, and still escape only after the siblings: run the landing
+    // under a bounded wait, since the failure mode is a hang.
+    slowDone.set(0)
+    val oom = new OutOfMemoryError("simulated")
+    val fatal: Seq[() => Unit] =
+      Seq[() => Unit](() => { Thread.sleep(50); throw oom }) ++
+        (1 to 4).map(_ => () => {
+          Thread.sleep(400); slowDone.incrementAndGet(); ()
+        })
+    val landed = scala.concurrent.Promise[(Throwable, Int)]()
+    val lander = new Thread(() => landed.success(
+      try { CutReportMaintenance.landParallel(fatal); (null, slowDone.get()) }
+      catch { case e: Throwable => (e, slowDone.get()) }))
+    lander.setDaemon(true)
+    lander.start()
+    val (escaped, doneAtEscape) = scala.concurrent.Await.result(landed.future,
+      scala.concurrent.duration.Duration(60, "s"))
+    assert(escaped eq oom, s"the fatal error must propagate, got $escaped")
+    assert(doneAtEscape == 4,
+      s"only $doneAtEscape/4 sibling landings had completed when the fatal error escaped")
     // And a fully-successful landing still runs every task exactly once.
     val ok = new java.util.concurrent.atomic.AtomicInteger(0)
     CutReportMaintenance.landParallel(
