@@ -289,11 +289,7 @@ object CutMaintScale {
         s""""compact_every":$compactEvery,""" +
         armJsons.mkString("", ",", "}"))
     } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(root))
+      graft.operators.VersionedDir.deleteTree(new java.io.File(root))
       spark.stop()
     }
   }

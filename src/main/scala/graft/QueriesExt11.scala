@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{DedupFunctions, ExactSubstrings, TextFunctions}
+import graft.operators.VersionedDir
 import QueriesExt.docs
 
 /** Round-12 depth tier: dedup as a MAINTAINED capability rather than a
@@ -643,7 +644,7 @@ object QueriesExt11 {
       }
       graft.operators.CutReportMaintenance.report(s, state)
         .localCheckpoint(true)
-    } finally rmTree(state)
+    } finally VersionedDir.deleteTree(new java.io.File(state))
   }
   val q298Sql: String = cutReportSql(
     "doc_id % (SELECT greatest(1, count(*) // 6000) FROM documents) = 0")
@@ -679,7 +680,7 @@ object QueriesExt11 {
       graft.operators.CutReportMaintenance.ingest(s, state, corpus)
       graft.operators.CutReportMaintenance.curatedCorpus(s, state)
         .localCheckpoint(true)
-    } finally rmTree(state)
+    } finally VersionedDir.deleteTree(new java.io.File(state))
   }
   val q299Sql: String = {
     val samplePred =
@@ -690,13 +691,6 @@ object QueriesExt11 {
        |WHERE r.tier NOT IN ('exact', 'neardup', 'embdup')""".stripMargin
   }
 
-  private def rmTree(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(); ()
-    }
-    rm(new java.io.File(path))
-  }
 
   // ------------------------------------------------------------ registry
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.VersionedDir
 import QueriesExt.docs
 
 /** Round-17 depth tier: the UNIFIED maintenance feed under the value
@@ -77,7 +78,7 @@ object QueriesExt12 {
             concat(col("ptext"), lit(" recrawl v3")), 2L)),
         seqCol = Some("seq"))
       CutReportMaintenance.maintainedView(s, state).localCheckpoint(true)
-    } finally rmTree(state)
+    } finally VersionedDir.deleteTree(new java.io.File(state))
   }
 
   /** DuckDB replays the op schedule to the final corpus AT THE
@@ -121,13 +122,6 @@ object QueriesExt12 {
        |LEFT JOIN fc f2 ON rep.dup_of = f2.doc_id""".stripMargin
   }
 
-  private def rmTree(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(); ()
-    }
-    rm(new java.io.File(path))
-  }
 
   // ------------------------------------------------------------ registry
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -120,11 +120,7 @@ object SpineScale {
         s""""reps":$reps,"all_secs":[${times.map(t => f"$t%.1f").mkString(",")}]""" +
         mergeJson + "}")
     } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(tmp))
+      graft.operators.VersionedDir.deleteTree(new java.io.File(tmp))
       spark.stop()
     }
   }

@@ -166,11 +166,7 @@ object CutReportMaintenance {
     ).mkString("", "\n", "\n")
     // Atomic like the version pointer (r14 review): a crash mid-write
     // must never leave a truncated _params wedging the dir.
-    val tmp = java.nio.file.Paths.get(s"$stateDir/_params.tmp")
-    java.nio.file.Files.write(tmp, body.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, paramsPath(stateDir),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    VersionedDir.writeAtomically(paramsPath(stateDir), body)
   }
 
   private[operators] def storedParams(stateDir: String): Option[Params] = {
@@ -207,7 +203,7 @@ object CutReportMaintenance {
     * `_params` is a pre-r15 or foreign dir — refusing beats silently
     * reading it wrong (r14 review). Called by every opener. */
   private def checkLayout(stateDir: String): Unit =
-    if (currentVersion(stateDir) >= 0) {
+    if (VersionedDir(stateDir).current >= 0) {
       if (!java.nio.file.Files.exists(paramsPath(stateDir)))
         throw new IllegalStateException(
           s"state dir $stateDir has a _version pointer but no _params — " +
@@ -239,65 +235,11 @@ object CutReportMaintenance {
     }
   }
 
-  // ---- single-writer guard (r13 review): an exclusive OS file lock for
-  // the duration of each ingest/compact. tryLock (never a blocking wait)
-  // so a second writer FAILS FAST; the OS releases the lock on process
-  // death, so a crash never wedges the state dir (unlike an
-  // O_EXCL-created lock file, which would survive the crash and block
-  // the redelivered batch that crash-safety depends on).
-
-  private def withWriterLock[T](stateDir: String)(body: => T): T = {
-    new java.io.File(stateDir).mkdirs()
-    val ch = java.nio.channels.FileChannel.open(
-      java.nio.file.Paths.get(s"$stateDir/_lock"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.WRITE)
-    try {
-      val lock =
-        try ch.tryLock()
-        catch { case _: java.nio.channels.OverlappingFileLockException => null }
-      require(lock != null,
-        s"another writer holds $stateDir/_lock — CutReportMaintenance " +
-          "state dirs are single-writer (one ingest/compact at a time)")
-      try body finally lock.release()
-    } finally ch.close()
-  }
-
-  // ---- versioned state with an atomic commit pointer (r13 review):
-  // every ingest writes ALL its segments under version n+1 and then
-  // atomically renames the `_version` pointer onto it. A crash anywhere
-  // mid-ingest leaves the pointer on v<n> — every table still mutually
-  // consistent, orphaned v<n+1> segments invisible to readers — and the
-  // redelivered batch simply overwrites them.
-
-  private def currentVersion(stateDir: String): Long = {
-    val f = new java.io.File(s"$stateDir/_version")
-    if (f.exists())
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim.toLong
-    else -1L
-  }
-
-  private def commitVersion(stateDir: String, v: Long): Unit = {
-    val dir = new java.io.File(stateDir)
-    dir.mkdirs()
-    val tmp = java.nio.file.Paths.get(s"$stateDir/_version.tmp")
-    java.nio.file.Files.write(tmp, v.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(s"$stateDir/_version"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    // Best-effort GC of superseded version dirs, DEFERRED one version
-    // (r13 review): a lazy DataFrame handed out under v-1 stays
-    // readable across the commit; v-2 and older go.
-    Option(dir.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("v") &&
-        f.getName.drop(1).forall(_.isDigit) && f.getName.drop(1).toLong < v - 1)
-      .foreach(deleteTree)
-  }
-
-  private def deleteTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteTree))
-    f.delete(); ()
-  }
+  // ---- single-writer, versioned state (r13 review): every writer holds
+  // the state dir's [[VersionedDir]] lock, lands ALL its segments under
+  // version n+1 and then moves the `_version` pointer onto it. A crash
+  // mid-write leaves v<n> live and mutually consistent; the next writer
+  // purges the orphaned v<n+1> segments ([[purgeOrphans]]).
 
   // ---- per-version SEGMENTS (r13 CutMaintScale measurement): each
   // ingest lands only ITS rows under seg_<name>/v<n>; readers union
@@ -312,13 +254,8 @@ object CutReportMaintenance {
     * raises the floor (committed inside the versioned dir, so it flips
     * atomically WITH the pointer) — readers then ignore the superseded
     * segment dirs, which are GC'd one compaction later. */
-  private def segFloor(stateDir: String): Long = {
-    val v = currentVersion(stateDir)
-    val f = new java.io.File(s"$stateDir/v$v/_seg_floor")
-    if (v >= 0 && f.exists())
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim.toLong
-    else 0L
-  }
+  private def segFloor(stateDir: String): Long =
+    VersionedDir(stateDir).committedText("_seg_floor").fold(0L)(_.toLong)
 
   private def segmentDirs(stateDir: String, name: String): Seq[(Long, String)] = {
     val d = new java.io.File(s"$stateDir/seg_$name")
@@ -331,7 +268,7 @@ object CutReportMaintenance {
   }
 
   private def liveSegmentDirs(stateDir: String, name: String): Seq[String] = {
-    val cur = currentVersion(stateDir)
+    val cur = VersionedDir(stateDir).current
     val floor = segFloor(stateDir)
     segmentDirs(stateDir, name)
       .collect { case (v, p) if v >= floor && v <= cur => p }
@@ -510,6 +447,24 @@ object CutReportMaintenance {
     }
   }
 
+  /** The `spark.graft.cutmaint.*` tuning confs, each parsed here only.
+    * Every writer calls [[checkConfs]] on entry, so a malformed value
+    * fails before any segment lands and names its key. */
+  private def cutmaintConf[T](spark: SparkSession, key: String, parse: String => T): Option[T] =
+    spark.conf.getOption(s"spark.graft.cutmaint.$key").map { s =>
+      try parse(s) catch { case _: NumberFormatException => throw new IllegalArgumentException(
+        s"spark.graft.cutmaint.$key='$s' is not a number") }
+    }
+  private def segmentWriteFiles(spark: SparkSession): Int =
+    cutmaintConf(spark, "segmentWriteFiles", _.toInt).getOrElse(1)
+  private def deltaShufflePartitions(spark: SparkSession): Int =
+    cutmaintConf(spark, "deltaShufflePartitions", _.toInt).getOrElse(8)
+  private def targetBucketRows(spark: SparkSession): Long =
+    cutmaintConf(spark, "targetBucketRows", _.toLong).getOrElse(TargetBucketRows)
+  private def checkConfs(spark: SparkSession): Unit = {
+    segmentWriteFiles(spark); deltaShufflePartitions(spark); targetBucketRows(spark); ()
+  }
+
   /** Per-ingest segments are BATCH-grain by contract (never O(corpus)),
     * so their file count is bounded explicitly instead of relying on
     * AQE coalescing (disabled inside the delta-grain writers, see
@@ -519,9 +474,7 @@ object CutReportMaintenance {
     * segment writes (`spark.graft.cutmaint.segmentWriteFiles`). */
   private def writeSegment(df: DataFrame, stateDir: String, version: Long,
                            name: String): Unit = {
-    val files = df.sparkSession.conf
-      .getOption("spark.graft.cutmaint.segmentWriteFiles")
-      .map(_.toInt).getOrElse(1)
+    val files = segmentWriteFiles(df.sparkSession)
     val w = if (files > 0) df.coalesce(files) else df
     w.write.mode("overwrite").parquet(s"$stateDir/seg_$name/v$version")
   }
@@ -552,9 +505,7 @@ object CutReportMaintenance {
     // a static conf instead of per-exchange replanning jobs).
     val kAqe = "spark.sql.adaptive.enabled"
     val kShuf = "spark.sql.shuffle.partitions"
-    val deltaParts = spark.conf
-      .getOption("spark.graft.cutmaint.deltaShufflePartitions")
-      .map(_.toInt).getOrElse(8)
+    val deltaParts = deltaShufflePartitions(spark)
     val prevAqe = spark.conf.getOption(kAqe)
     val prevShuf = spark.conf.getOption(kShuf)
     spark.conf.set(kAqe, "false")
@@ -570,7 +521,7 @@ object CutReportMaintenance {
     * actions are only sequential because the driver calls them
     * sequentially): each table's write is an independent job over an
     * already-checkpointed (or trivially derived) frame, targets its own
-    * directory, and nothing below [[commitVersion]] orders them among
+    * directory, and nothing below the version commit orders them among
     * themselves — only the commit must come after ALL of them. A
     * sequential landing pays one scheduler round-trip per tiny job
     * (~14 writes/ingest dominated the maintained-query wall); the pool
@@ -644,9 +595,7 @@ object CutReportMaintenance {
         // Conf override so tests can force B > 1 on tiny corpora; the
         // recorded per-segment _nbuckets keeps reads self-describing
         // whatever the writer's setting was.
-        val target = df.sparkSession.conf
-          .getOption("spark.graft.cutmaint.targetBucketRows")
-          .map(_.toLong).getOrElse(TargetBucketRows)
+        val target = targetBucketRows(df.sparkSession)
         val b = math.min(MaxBuckets.toLong,
           (rows + target - 1) / target).toInt
         if (rows == 0L) ()
@@ -680,7 +629,7 @@ object CutReportMaintenance {
                                 keys: DataFrame,
                                 projectMain: DataFrame => DataFrame)
       : DataFrame = {
-    val cur = currentVersion(stateDir)
+    val cur = VersionedDir(stateDir).current
     val floor = segFloor(stateDir)
     val sidecarVs = segmentDirs(stateDir, sidecarName)
       .collect { case (v, _) if v >= floor && v <= cur => v }.toSet
@@ -753,7 +702,7 @@ object CutReportMaintenance {
   private def purgeOrphans(stateDir: String, version: Long): Unit =
     allTables.foreach { name =>
       val d = new java.io.File(s"$stateDir/seg_$name/v$version")
-      if (d.exists()) deleteTree(d)
+      VersionedDir.deleteTree(d)
     }
 
   /** Fold every live segment of each table into ONE segment at a fresh
@@ -771,9 +720,10 @@ object CutReportMaintenance {
     * are GC'd ONE COMPACTION LATER (r13 review: a lazy [[report]]
     * DataFrame handed out before the compaction stays readable). */
   def compact(spark: SparkSession, stateDir: String): Unit =
-    withWriterLock(stateDir) {
+    VersionedDir(stateDir).withWriterLock {
+      checkConfs(spark)
       checkLayout(stateDir)
-      val curV = currentVersion(stateDir)
+      val curV = VersionedDir(stateDir).current
       require(curV >= 0, s"nothing to compact at $stateDir")
       val p = storedParams(stateDir).getOrElse(Params())
       val nextV = curV + 1
@@ -899,27 +849,22 @@ object CutReportMaintenance {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$stateDir/v$nextV/_seg_floor"),
         nextV.toString.getBytes("UTF-8"))
-      commitVersion(stateDir, nextV)
+      VersionedDir(stateDir).commit(nextV)
       // Deferred GC: drop only segments superseded by the PREVIOUS
       // compaction (below the old floor); the ones this compaction just
       // folded stay one more generation for in-flight lazy readers.
       allTables.foreach { name =>
         segmentDirs(stateDir, name)
           .collect { case (v, path) if v < floorBefore => new java.io.File(path) }
-          .foreach(deleteTree)
+          .foreach(VersionedDir.deleteTree)
       }
     }
 
   /** Per-stream applied-batch markers, committed WITH the version (a
     * marker outside the atomic commit could disagree with the state
     * after a crash). Carried forward version to version. */
-  private def appliedBatch(stateDir: String, streamId: String): Long = {
-    val v = currentVersion(stateDir)
-    val f = new java.io.File(s"$stateDir/v$v/_applied_$streamId")
-    if (v >= 0 && f.exists())
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim.toLong
-    else -1L
-  }
+  private def appliedBatch(stateDir: String, streamId: String): Long =
+    VersionedDir(stateDir).committedText(s"_applied_$streamId").fold(-1L)(_.toLong)
 
   private def writeMarkers(stateDir: String, from: Long, to: Long,
                            update: Option[(String, Long)]): Unit = {
@@ -1255,7 +1200,8 @@ object CutReportMaintenance {
   def ingest(spark: SparkSession, stateDir: String, batch: DataFrame,
              p: Params = Params(),
              appliedMarker: Option[(String, Long)] = None): DataFrame =
-    withWriterLock(stateDir) {
+    VersionedDir(stateDir).withWriterLock {
+      checkConfs(spark)
       checkLayout(stateDir)
       requireOrPersistParams(stateDir, p)
       withDeltaGrainConf(spark) {
@@ -1270,7 +1216,7 @@ object CutReportMaintenance {
                            keyMapSeg: Option[DataFrame] = None,
                            nextSlot: Option[Long] = None,
                            prep: Option[BatchPrep] = None): DataFrame = {
-    val curV = currentVersion(stateDir)
+    val curV = VersionedDir(stateDir).current
     val nextV = curV + 1
     purgeOrphans(stateDir, nextV)
     // Deleted-id filter over the content tables: free until the first
@@ -1667,7 +1613,7 @@ object CutReportMaintenance {
 
     // ---- land the batch's segments, then flip the pointer: every
     // write below is O(batch + touched state), never O(corpus). A crash
-    // anywhere before commitVersion leaves v<cur> intact and the
+    // anywhere before the version commit leaves v<cur> intact and the
     // redelivered batch overwrites the orphans.
     // Known-empty segments are SKIPPED (r14 review): landing empty
     // tombstone/vector segments permanently disabled the
@@ -1721,14 +1667,14 @@ object CutReportMaintenance {
     writeMarkers(stateDir, curV, nextV, appliedMarker)
     // The slot counter lands AFTER writeMarkers (which carries the old
     // value forward) so the bump overwrites the carried copy, and
-    // BEFORE commitVersion so it flips atomically with the segments.
+    // BEFORE the version commit so it flips atomically with the segments.
     nextSlot.foreach { ns =>
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$stateDir/v$nextV/_next_slot"),
         ns.toString.getBytes("UTF-8"))
       ()
     }
-    commitVersion(stateDir, nextV)
+    VersionedDir(stateDir).commit(nextV)
     out
     } finally tierPool.shutdown()
   }
@@ -1769,7 +1715,8 @@ object CutReportMaintenance {
   def deleteDocs(spark: SparkSession, stateDir: String,
                  ids: DataFrame, p: Params = Params(),
                  appliedMarker: Option[(String, Long)] = None): DataFrame =
-    withWriterLock(stateDir) {
+    VersionedDir(stateDir).withWriterLock {
+      checkConfs(spark)
       checkLayout(stateDir)
       requireOrPersistParams(stateDir, p)
       withDeltaGrainConf(spark) {
@@ -1781,7 +1728,7 @@ object CutReportMaintenance {
                            ids: DataFrame, p: Params,
                            appliedMarker: Option[(String, Long)],
                            idMapSeg: Option[DataFrame] = None): DataFrame = {
-      val curV = currentVersion(stateDir)
+      val curV = VersionedDir(stateDir).current
       require(curV >= 0, s"nothing to delete from at $stateDir")
       val nextV = curV + 1
       purgeOrphans(stateDir, nextV)
@@ -2227,7 +2174,7 @@ object CutReportMaintenance {
         idMapSeg.map(m => () => writeSegmentUnlessEmpty(
           m.withColumn("v", lit(nextV)), stateDir, nextV, "id_map")).toSeq)
       writeMarkers(stateDir, curV, nextV, appliedMarker)
-      commitVersion(stateDir, nextV)
+      VersionedDir(stateDir).commit(nextV)
       out
       } finally tierPool.shutdown()
   }
@@ -2486,13 +2433,8 @@ object CutReportMaintenance {
     * numeric slot. Rides the versioned dir (carried by
     * [[writeMarkers]]) so it flips atomically with the commit; a
     * redelivered ingest half therefore recomputes identical slots. */
-  private def nextSlotStored(stateDir: String): Long = {
-    val v = currentVersion(stateDir)
-    val f = new java.io.File(s"$stateDir/v$v/_next_slot")
-    if (v >= 0 && f.exists())
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim.toLong
-    else 0L
-  }
+  private def nextSlotStored(stateDir: String): Long =
+    VersionedDir(stateDir).committedText("_next_slot").fold(0L)(_.toLong)
 
   /** The feed's key mode — "long" or "string" — stamped by the first
     * [[applyOps]] against the dir and immutable after: mixing modes
@@ -2553,7 +2495,8 @@ object CutReportMaintenance {
                p: Params = Params(), streamId: Option[String] = None,
                batchId: Long = -1L, seqCol: Option[String] = None,
                embCol: Option[String] = None): DataFrame =
-    withWriterLock(stateDir) {
+    VersionedDir(stateDir).withWriterLock {
+      checkConfs(spark)
       checkLayout(stateDir)
       requireOrPersistParams(stateDir, p)
       streamId.foreach(s => require(s.nonEmpty && s.forall(c =>
@@ -2703,7 +2646,7 @@ object CutReportMaintenance {
       // on the delete's commit — so they are prepared concurrently with
       // the delete half's repair tiers and handed to ingestLocked. The
       // prep writes nothing; state reads inside ingestLocked still
-      // happen strictly after the delete's commitVersion.
+      // happen strictly after the delete's version commit.
       val willIngest = !halfDone("ing") && nIng > 0L
       val ingBatch =
         if (!willIngest) None
@@ -2749,12 +2692,24 @@ object CutReportMaintenance {
         // The prep future writes no state, but nothing may outlive the
         // writer lock (same discipline as landParallel): the pool is
         // drained before the lock scope closes, failure or not.
-        prepPool.shutdown()
-        prepPool.awaitTermination(1L, java.util.concurrent.TimeUnit.HOURS)
-        ()
+        drain(prepPool, scala.concurrent.duration.Duration(1L, "hour"), stateDir)
       }
       }
     }
+
+  /** Shut `pool` down and wait up to `timeout` for its tasks; past it,
+    * interrupt them and fail rather than let the writer lock of
+    * `stateDir` close while they still submit jobs. */
+  private[operators] def drain(pool: java.util.concurrent.ExecutorService,
+                               timeout: scala.concurrent.duration.FiniteDuration,
+                               stateDir: String): Unit = {
+    pool.shutdown()
+    if (!pool.awaitTermination(timeout.toMillis, java.util.concurrent.TimeUnit.MILLISECONDS)) {
+      pool.shutdownNow()
+      throw new IllegalStateException(
+        s"applyOps prep for $stateDir still running after $timeout — interrupted")
+    }
+  }
 
   /** The unified feed's EXTERNAL view of the maintained report: one
     * row per live external key — its tier, cut tokens, and (when the

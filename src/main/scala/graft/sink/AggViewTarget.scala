@@ -1,8 +1,8 @@
 package graft.sink
 
 import graft.config.TableSpec
-import graft.operators.IncrementalAgg
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.operators.{IncrementalAgg, VersionedDir}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Maintained-rollup decorator around any [[MergeTarget]]: next to the
@@ -23,14 +23,19 @@ import org.apache.spark.sql.functions._
   * The view merge is the union + hash re-aggregate currency (exact
   * BIGINT sums, decimal(38,0) squares; zero-count groups vanish).
   *
+  * The view is a [[VersionedDir]]: each update lands in `viewPath/v<n+1>/`
+  * and commits by moving the `_version` pointer, so readers see a whole
+  * view and a crashed update leaves the previous one live.
+  *
   * Replay safety: the delta application is NOT naturally idempotent
-  * (unlike the type-1 merge), so the view directory carries the applied
+  * (unlike the type-1 merge), so each view version carries the applied
   * batch's content checksum (order-independent XOR of row hashes — the
-  * q139 fingerprint currency) INSIDE the atomically-swapped directory;
-  * a checkpoint-replayed batch matches the stored checksum and skips
+  * q139 fingerprint currency) INSIDE its version directory; a
+  * checkpoint-replayed batch matches the committed checksum and skips
   * the view update while the inner merge re-runs idempotently. The
-  * checksum rides the same swap as the view data, so no crash window
-  * separates them.
+  * checksum flips with the pointer, so no crash window separates it
+  * from the view data. A view directory written before versioning is
+  * ignored: the first update bootstraps from the pre-merge target.
   *
   * Write ordering: the view updates BEFORE the inner merge (the view's
   * retraction needs the PRE-merge target). A crash between the two
@@ -41,23 +46,14 @@ final class AggViewTarget(inner: MergeTarget, viewPath: String)
 
   def snapshot(spark: SparkSession): DataFrame = inner.snapshot(spark)
 
-  private def exists: Boolean = new java.io.File(viewPath).exists()
+  private val versions = VersionedDir(viewPath)
 
-  private def recover(): Unit =
-    DirSwap.recover(new java.io.File(viewPath + ".old"), new java.io.File(viewPath))
+  private def exists: Boolean = versions.current >= 0
 
   /** The maintained rollup: group keys, cnt, sumv, sumsq. */
   def viewSnapshot(spark: SparkSession): DataFrame = {
-    recover()
     require(exists, s"no agg view at $viewPath")
-    spark.read.parquet(viewPath)
-  }
-
-  private def checksumFile = new java.io.File(viewPath, "_applied_checksum")
-
-  private def lastChecksum: Option[String] = {
-    val f = checksumFile
-    if (f.isFile) Some(java.nio.file.Files.readString(f.toPath).trim) else None
+    spark.read.parquet(versions.dir(versions.current).getPath)
   }
 
   /** Order/partitioning-independent batch fingerprint: XOR of portable
@@ -85,46 +81,47 @@ final class AggViewTarget(inner: MergeTarget, viewPath: String)
   def merge(stage: DataFrame, spec: TableSpec): Unit = {
     require(spec.aggViewKeys.nonEmpty && spec.aggViewValue.nonEmpty,
       "AggViewTarget needs agg_view_keys and agg_view_value")
-    recover()
     val spark = stage.sparkSession
     val fp = fingerprint(stage, spec)
-    if (!lastChecksum.contains(fp)) {
-      val groups = spec.aggViewKeys
-      val v = col(spec.aggViewValue).cast("long")
-      val keep = if (spec.skipDelete) lit(true) else col("op_aws") =!= "d"
-      val plus = stage.filter(keep).select(
-        groups.map(col) ++ Seq(lit(1L).as(IncrementalAgg.cntCol),
-          v.as(IncrementalAgg.sumCol),
-          (v.cast("decimal(38,0)") * v).as(IncrementalAgg.sumSqCol)): _*)
-      val keyFrame = stage.select(spec.mergeKeys.map(col): _*).distinct()
-      // Pre-merge target. With a live view the target MUST be readable —
-      // a transient snapshot failure propagates and fails the batch (the
-      // checkpoint replays it) rather than silently dropping the
-      // retractions. Only before the first view write may the target
-      // legitimately not exist yet.
-      val preTarget: Option[DataFrame] =
-        if (exists) Some(inner.snapshot(spark))
-        else scala.util.Try(inner.snapshot(spark)).toOption
-      val minus = preTarget.map(
-        _.join(broadcast(keyFrame), spec.mergeKeys, "left_semi").select(
-          groups.map(col) ++ Seq(lit(-1L).as(IncrementalAgg.cntCol),
-            (-v).as(IncrementalAgg.sumCol),
-            (-(v.cast("decimal(38,0)") * v)).as(IncrementalAgg.sumSqCol)): _*))
-      val delta = minus.fold(plus)(plus.unionByName(_))
-      // First write bootstraps the state from the PRE-merge target, so a
-      // view attached to a table with history starts equal to its
-      // recompute instead of tracking only post-attachment deltas.
-      val state = if (exists) viewSnapshot(spark) else
-        preTarget.map(t => IncrementalAgg.initialMoments(t, groups, v))
-          .getOrElse(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], delta.schema))
-      val merged = IncrementalAgg.applyMomentDeltas(state, delta, groups)
-      val tmp = viewPath + ".tmp"
-      merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_applied_checksum").toPath, fp)
-      DirSwap.swap(new java.io.File(tmp), new java.io.File(viewPath),
-        new java.io.File(viewPath + ".old"))
+    versions.withWriterLock {
+      if (!versions.committedText("_applied_checksum").contains(fp)) {
+        val groups = spec.aggViewKeys
+        val v = col(spec.aggViewValue).cast("long")
+        val keep = if (spec.skipDelete) lit(true) else col("op_aws") =!= "d"
+        val plus = stage.filter(keep).select(
+          groups.map(col) ++ Seq(lit(1L).as(IncrementalAgg.cntCol),
+            v.as(IncrementalAgg.sumCol),
+            (v.cast("decimal(38,0)") * v).as(IncrementalAgg.sumSqCol)): _*)
+        val keyFrame = stage.select(spec.mergeKeys.map(col): _*).distinct()
+        // Pre-merge target. With a live view the target MUST be readable —
+        // a transient snapshot failure propagates and fails the batch (the
+        // checkpoint replays it) rather than silently dropping the
+        // retractions. Only before the first view write may the target
+        // legitimately not exist yet.
+        val preTarget: Option[DataFrame] =
+          if (exists) Some(inner.snapshot(spark))
+          else scala.util.Try(inner.snapshot(spark)).toOption
+        val minus = preTarget.map(
+          _.join(broadcast(keyFrame), spec.mergeKeys, "left_semi").select(
+            groups.map(col) ++ Seq(lit(-1L).as(IncrementalAgg.cntCol),
+              (-v).as(IncrementalAgg.sumCol),
+              (-(v.cast("decimal(38,0)") * v)).as(IncrementalAgg.sumSqCol)): _*))
+        val delta = minus.fold(plus)(plus.unionByName(_))
+        // First write bootstraps the state from the PRE-merge target, so a
+        // view attached to a table with history starts equal to its
+        // recompute instead of tracking only post-attachment deltas.
+        val state = if (exists) viewSnapshot(spark) else
+          preTarget.map(t => IncrementalAgg.initialMoments(t, groups, v))
+            .getOrElse(spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], delta.schema))
+        val merged = IncrementalAgg.applyMomentDeltas(state, delta, groups)
+        val next = versions.current + 1
+        VersionedDir.deleteTree(versions.dir(next)) // the orphan of a crashed update, if any
+        merged.write.parquet(versions.dir(next).getPath)
+        java.nio.file.Files.writeString(new java.io.File(versions.dir(next), "_applied_checksum").toPath, fp)
+        versions.commit(next)
+        versions.dropUnversioned()
+      }
     }
     inner.merge(stage, spec)
   }

@@ -1,7 +1,7 @@
 package graft.sink
 
 import graft.config.TableSpec
-import graft.operators.{MergeOps, Scd2, Skew}
+import graft.operators.{MergeOps, Scd2, Skew, VersionedDir}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   * one parquet target, [[ParquetMergeTarget]]: a key-bucketed table
   * (`buckets = 1` is the whole-table case) whose merge is the type-1
   * upsert or, for `scd2_history` specs, the type-2 history fold. It lets
-  * every merge semantics be oracle-tested with no warehouse.
+  * every merge semantics be oracle-tested with no warehouse. It commits
+  * the way every on-disk writer here does: a new `v<n>` directory, then
+  * an atomic move of the `_version` pointer ([[VersionedDir]]).
   *
   * The warehouse itself is the one JDBC sink, [[WarehouseMergeSink]]
   * (StagedCopySink.scala): a staging-table load through a pluggable
@@ -28,44 +30,6 @@ trait MergeTarget {
   def snapshot(spark: SparkSession): DataFrame
 }
 
-private[sink] object DirSwap {
-  def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete(); ()
-  }
-
-  /** Replace `dst` with `src` via an `old` hop directory. `old` must live
-    * OUTSIDE any directory Spark lists as a table (a hop inside a
-    * partitioned table path would be discovered as a bogus partition after
-    * a crash). With `allowMissingSrc` (the "bucket emptied by deletes"
-    * case) a missing `src` removes `dst`; otherwise it throws — a missing
-    * tmp on the whole-table path is a failed write, not a delete. */
-  def swap(src: java.io.File, dst: java.io.File, old: java.io.File,
-           allowMissingSrc: Boolean = false): Unit = {
-    if (!allowMissingSrc && !src.exists())
-      throw new java.io.IOException(s"cannot swap in $src: missing")
-    if (old.exists()) rmTree(old)
-    if (dst.exists() && !dst.renameTo(old))
-      throw new java.io.IOException(s"cannot swap out $dst")
-    if (src.exists() && !src.renameTo(dst))
-      throw new java.io.IOException(s"cannot swap in $src")
-    if (old.exists()) rmTree(old)
-  }
-
-  /** Recover an interrupted [[swap]]: a surviving hop with a missing live
-    * directory means the crash hit between swap-out and swap-in — the hop
-    * holds the ONLY copy, so restore it (a checkpoint replay would
-    * otherwise see an empty target and lose every key not in the replayed
-    * batch). A hop next to a live directory is completed-swap garbage. */
-  def recover(hop: java.io.File, dst: java.io.File): Unit =
-    if (hop.exists()) {
-      if (!dst.exists()) {
-        if (!hop.renameTo(dst))
-          throw new java.io.IOException(s"cannot restore $hop to $dst")
-      } else rmTree(hop)
-    }
-}
-
 /** Parquet merge target (SURVEY §7.5): the table is laid out as parquet
   * partitioned by a stable key bucket
   * `kb_aws = pmod(xxhash64(merge keys), buckets)`, and a merge reads and
@@ -73,14 +37,16 @@ private[sink] object DirSwap {
   *
   *  - the target scan is partition-pruned to the touched buckets (a CDC
   *    micro-batch touches few buckets relative to a 100 TB table);
-  *  - the rewrite swaps only the touched bucket directories; untouched
-  *    buckets keep their files bit- and mtime-identical, so per-batch I/O
-  *    is O(touched data), not O(|target|);
+  *  - the table is a [[VersionedDir]]: each merge writes the touched
+  *    buckets into `v<n+1>`, hard-links every untouched bucket's files
+  *    from `v<n>` (same inode and mtime — untouched data is never
+  *    rewritten, so per-batch I/O is O(touched data), not O(|target|)),
+  *    and commits by moving the `_version` pointer. Readers see a whole
+  *    pre-batch or post-batch table; a crash before the pointer move
+  *    leaves `v<n>` live, and the checkpoint replay purges the orphan
+  *    and re-merges the batch (the merge algebra is idempotent);
   *  - bucket assignment is a pure hash of the key — stable across batches
-  *    and replays, so checkpoint-replayed batches rewrite the same buckets
-  *    idempotently. A crash mid-swap leaves some buckets merged and some
-  *    not; the replay re-merges all of them and converges (the merge
-  *    algebra is idempotent per bucket);
+  *    and replays;
   *  - every rewrite leaves ONE file per live bucket: the write is clustered
   *    on `kb_aws`, so each bucket is written by exactly one task and write
   *    parallelism is bounded by the number of touched buckets. A legacy
@@ -97,59 +63,62 @@ private[sink] object DirSwap {
   *    tracked columns are the stage columns minus keys and meta.
   * Both are no-ops on a replayed batch (the T3 idempotence).
   *
-  * A pre-existing unbucketed (legacy) table is migrated in one whole-table
-  * rewrite on its first merge. `snapshot` drops the internal bucket
-  * column, so readers see the same schema under any bucket count. */
+  * A table written before versioning (top-level `kb_aws=N` directories,
+  * or older top-level unbucketed files) is read in place and becomes
+  * `v0` on its first merge; `snapshot` drops the internal bucket column,
+  * so readers see the same schema under any bucket count. */
 final class ParquetMergeTarget(path: String, buckets: Int = 64) extends MergeTarget {
   import ParquetMergeTarget.{Kb, MetaCols}
 
   private val table = new java.io.File(path).getAbsoluteFile
-  private def bucketDir(root: java.io.File, b: Int) = new java.io.File(root, s"$Kb=$b")
+  private val versions = new VersionedDir(table)
 
   /** `kb_aws=N` directory names under `dir` — the layout marker. */
   private def bucketNames(dir: java.io.File): Set[String] =
     Option(dir.list()).getOrElse(Array.empty).filter(_.startsWith(s"$Kb=")).toSet
 
-  /** A legacy (unbucketed) table has data files at the top level. A
-    * directory with neither bucket dirs nor data files must be treated as
-    * absent, not migrated (reading it would fail forever). */
-  private def hasLegacyDataFiles: Boolean =
-    Option(table.list()).getOrElse(Array.empty).exists(_.endsWith(".parquet"))
+  /** The live table: `v<current>`, or the table root itself for a table
+    * written before versioning. */
+  private def live(): java.io.File = {
+    val cur = versions.current
+    if (cur >= 0) versions.dir(cur) else { restoreHops(); table }
+  }
 
-  /** Restore any hop left by an interrupted swap: the whole-table hop
-    * (`<name>.old`) and every per-bucket hop (`<name>.old-kb_aws=N`). */
-  private def recover(): Unit = {
-    DirSwap.recover(new java.io.File(table.getPath + ".old"), table)
+  /** Pre-versioned tables only: restore any hop the old rename-swap
+    * commit left behind — the whole-table hop (`<name>.old`) and every
+    * per-bucket hop (`<name>.old-kb_aws=N`). A hop with a missing live
+    * directory holds the ONLY copy (the crash hit between swap-out and
+    * swap-in); a hop next to a live directory is completed-swap garbage. */
+  private def restoreHops(): Unit = {
+    def restore(hop: java.io.File, dst: java.io.File): Unit =
+      if (hop.exists()) {
+        if (dst.exists()) VersionedDir.deleteTree(hop)
+        else if (!hop.renameTo(dst)) throw new java.io.IOException(s"cannot restore $hop to $dst")
+      }
+    restore(new java.io.File(table.getPath + ".old"), table)
     val prefix = table.getName + ".old-"
     Option(table.getParentFile.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith(prefix))
-      .foreach(hop => DirSwap.recover(hop, new java.io.File(table, hop.getName.stripPrefix(prefix))))
+      .foreach(hop => restore(hop, new java.io.File(table, hop.getName.stripPrefix(prefix))))
   }
 
   def snapshot(spark: SparkSession): DataFrame = {
-    recover()
-    require(table.exists(), s"no target at $path")
-    spark.read.option("mergeSchema", "true").parquet(path).drop(Kb)
+    val dir = live()
+    require(dir.exists(), s"no target at $path")
+    spark.read.option("mergeSchema", "true").parquet(dir.getPath).drop(Kb)
   }
 
-  /** Write `merged` as bucket directories under `tmp`, clustered on the
+  /** Write `merged` as bucket directories under `dir`, clustered on the
     * bucket: the shuffle puts each bucket's rows in exactly one task, so
     * each `kb_aws=N` directory gets exactly one file. Unclustered, every
     * write task (one per scan split of the target plus one per stage
     * partition) holds rows of nearly every bucket and opens a file for
     * each, and the next merge's scan splits multiply the count again. */
-  private def write(merged: DataFrame, bucketOf: Column, tmp: java.io.File): Unit =
+  private def write(merged: DataFrame, bucketOf: Column, dir: java.io.File): Unit =
     merged.withColumn(Kb, bucketOf).repartition(col(Kb))
-      .write.mode(SaveMode.Overwrite).partitionBy(Kb).parquet(tmp.getPath)
+      .write.mode(SaveMode.Overwrite).partitionBy(Kb).parquet(dir.getPath)
 
-  /** A merge that would leave no bucket at all (every key deleted) lands
-    * one zero-row file in bucket `b` of `tmp` instead, so the table stays
-    * readable with its last columns. */
-  private def keepReadable(merged: DataFrame, tmp: java.io.File, b: Int): Unit =
-    merged.limit(0).write.parquet(bucketDir(tmp, b).getPath)
-
-  def merge(stage0: DataFrame, spec: TableSpec): Unit = {
-    recover()
+  def merge(stage0: DataFrame, spec: TableSpec): Unit = versions.withWriterLock {
     val spark = stage0.sparkSession
     val keys = spec.mergeKeys
     val isDelete = col("op_aws") === "d"
@@ -166,44 +135,48 @@ final class ParquetMergeTarget(path: String, buckets: Int = 64) extends MergeTar
       else if (spec.skipDelete) MergeOps.mergeSkipDelete(target, stage, keys, MetaCols)
       else MergeOps.merge(target, stage, keys, isDelete, MetaCols)
     val bucketOf = Skew.keyBucket(keys.map(col), buckets)
-    val tmp = new java.io.File(table.getPath + ".tmp")
-    val live = bucketNames(table)
-    if (live.isEmpty) {
-      // Create — or migrate a legacy unbucketed table in one whole-table
-      // pass. A dir with neither layout is a create, not a migration.
-      val merged = if (hasLegacyDataFiles) fold(spark.read.parquet(path)) else create()
-      write(merged, bucketOf, tmp)
-      if (bucketNames(tmp).isEmpty) keepReadable(merged, tmp, 0)
-      DirSwap.swap(tmp, table, new java.io.File(table.getPath + ".old"))
-    } else {
-      // ≤ `buckets` distinct values — a bounded driver-side collect by design.
-      val touched = stage.select(bucketOf).distinct().collect().map(_.getInt(0)).sorted
-      // Read ONLY the touched bucket directories (listed explicitly with
-      // basePath): both the data AND the mergeSchema footer pass stay
-      // O(touched buckets) — a whole-table read with a runtime filter would
-      // still pay schema inference over every file in the table each
-      // trigger. mergeSchema: buckets rewritten after a schema drift carry
-      // wider files than untouched ones; a single-footer sample must not
-      // drop the drifted columns from kept rows. Rows of co-bucketed OTHER
-      // keys pass through the fold unchanged and are rewritten in place.
-      val touchedDirs = touched.map(bucketDir(table, _)).filter(_.exists()).map(_.getPath)
-      val merged =
-        if (touchedDirs.isEmpty) create()
-        else fold(spark.read.option("mergeSchema", "true").option("basePath", path)
-          .parquet(touchedDirs.toIndexedSeq: _*).drop(Kb))
-      write(merged, bucketOf, tmp)
-      if ((live -- touched.map(b => s"$Kb=$b") ++ bucketNames(tmp)).isEmpty)
-        keepReadable(merged, tmp, touched.head)
-      // Swap only the touched buckets; a bucket whose merged output is
-      // empty (all rows deleted) has no tmp dir and is removed. The `.old`
-      // hops are SIBLINGS of the table directory — a crash mid-swap must
-      // not leave a bogus `kb_aws=N.old` partition inside the table.
-      touched.foreach { b =>
-        DirSwap.swap(bucketDir(tmp, b), bucketDir(table, b),
-          new java.io.File(s"${table.getPath}.old-$Kb=$b"), allowMissingSrc = true)
+    val cur = versions.current
+    val src = live()
+    val next = versions.dir(cur + 1)
+    VersionedDir.deleteTree(next) // the orphan of a crashed writer, if any
+    val liveBuckets = bucketNames(src)
+    val (merged, untouched) =
+      if (liveBuckets.isEmpty) {
+        // Create — or fold an older unbucketed table in one whole-table
+        // pass. A dir with neither layout is a create, not a migration.
+        val legacy = Option(src.list()).getOrElse(Array.empty).exists(_.endsWith(".parquet"))
+        (if (legacy) fold(spark.read.parquet(src.getPath)) else create(), Set.empty[String])
+      } else {
+        // ≤ `buckets` distinct values — a bounded collect by design.
+        val touched = stage.select(bucketOf).distinct().collect().map(b => s"$Kb=${b.getInt(0)}")
+        // Read ONLY the touched bucket directories (listed explicitly with
+        // basePath): both the data AND the mergeSchema footer pass stay
+        // O(touched buckets) — a whole-table read with a runtime filter would
+        // still pay schema inference over every file in the table each
+        // trigger. mergeSchema: buckets rewritten after a schema drift carry
+        // wider files than untouched ones; a single-footer sample must not
+        // drop the drifted columns from kept rows. Rows of co-bucketed OTHER
+        // keys pass through the fold unchanged and are rewritten with them.
+        val touchedDirs = touched.filter(liveBuckets).map(new java.io.File(src, _).getPath)
+        (if (touchedDirs.isEmpty) create()
+         else fold(spark.read.option("mergeSchema", "true").option("basePath", src.getPath)
+           .parquet(touchedDirs.toIndexedSeq: _*).drop(Kb)),
+         liveBuckets -- touched)
       }
-      DirSwap.rmTree(tmp)
+    write(merged, bucketOf, next)
+    // Untouched buckets join the new version as hard links to their files.
+    for (name <- untouched) {
+      val to = new java.io.File(next, name)
+      to.mkdirs()
+      new java.io.File(src, name).listFiles().foreach(f =>
+        java.nio.file.Files.createLink(new java.io.File(to, f.getName).toPath, f.toPath))
     }
+    // A merge that would leave no bucket at all (every key deleted) lands
+    // one zero-row file instead, so the table stays readable with its
+    // last columns.
+    if (bucketNames(next).isEmpty) merged.limit(0).write.parquet(new java.io.File(next, s"$Kb=0").getPath)
+    versions.commit(cur + 1)
+    versions.dropUnversioned()
   }
 }
 

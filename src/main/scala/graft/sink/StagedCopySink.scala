@@ -115,7 +115,7 @@ object CopyStage {
   }
 
   def cleanup(batch: StagedBatch): Unit =
-    DirSwap.rmTree(new java.io.File(batch.dir))
+    graft.operators.VersionedDir.deleteTree(new java.io.File(batch.dir))
 
   /** Stage `df`, hand the batch to `load`, then remove the staged files
     * whether or not the load succeeded (`keep` leaves them for audit). */

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.operators.VersionedDir
+
 /** Streaming-STATE scale probe (VERDICT r10 #6): the stateful window
   * aggregates are spec-verified at toy size; this measures them at
   * volume under the production state store. It streams the sfDir
@@ -81,7 +83,7 @@ object StreamScale {
       // The replicated input is copies× the events table plus three
       // checkpoint trees — left behind, repeated Bench sweeps would
       // fill /tmp on a long-lived host.
-      rmTree(new java.io.File(tmp))
+      VersionedDir.deleteTree(new java.io.File(tmp))
     }
   }
 
@@ -137,12 +139,7 @@ object StreamScale {
           if (sos.isEmpty) -1L else sos.map(_.numRowsTotal).max,
           if (sos.isEmpty) -1L else sos.map(_.memoryUsedBytes).max)
       } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    } finally rmTree(new java.io.File(tmp))
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(); ()
+    } finally VersionedDir.deleteTree(new java.io.File(tmp))
   }
 
   /** Standalone runner: runMain graft.streaming.StreamScale [sfDir] [copies...] */

@@ -174,6 +174,31 @@ class AggViewSpec extends SparkSuite {
     assert(view(t) === recompute(t))
   }
 
+  test("a crashed view update (a version holding its checksum, no pointer move) " +
+    "does not skip the replay") {
+    val dir = tmp("graft-aggview-crash")
+    def target(name: String) =
+      new AggViewTarget(new ParquetMergeTarget(s"$dir/$name"), s"$dir/$name-view")
+    val t = target("t")
+    val twin = target("twin")
+    val b1 = batch(Seq((1L, "a", 10L, "c"), (2L, "b", 5L, "c")))
+    val b2 = batch(Seq((1L, "b", 11L, "u"), (3L, "a", 2L, "c")))
+    Seq(t, twin).foreach(_.merge(b1, spec))
+    twin.merge(b2, spec)
+    val before = view(t)
+    // the crash: t's update for b2 landed its data and checksum, the
+    // pointer never moved
+    val partial = new java.io.File(s"$dir/t-view/v1")
+    partial.mkdirs()
+    new java.io.File(s"$dir/twin-view/v1").listFiles().filter(_.isFile).foreach(f =>
+      java.nio.file.Files.copy(f.toPath, new java.io.File(partial, f.getName).toPath))
+    assert(new java.io.File(partial, "_applied_checksum").isFile)
+    assert(view(t) === before)
+    t.merge(b2, spec) // the checkpoint replay
+    assert(view(t) === recompute(t))
+    assert(view(t) === view(twin))
+  }
+
   test("sinkFactory routes agg_view specs through the decorator") {
     val dir = tmp("graft-aggview-factory")
     val target = graft.streaming.CdcApp.sinkFactory(spark, dir)(spec)

@@ -2,7 +2,7 @@ package graft
 
 import graft.config.{JobConfig, TableSpec}
 import graft.envelope.FlinkDebeziumCdc
-import graft.operators.Dedup
+import graft.operators.{Dedup, VersionedDir}
 import graft.sink.{CopyExecutor, JdbcWriteExecutor, MergeTarget, ParquetMergeTarget, ReplayCopyExecutor, WarehouseMergeSink}
 import graft.sources.CdcGen
 import graft.streaming.CdcPipeline
@@ -18,9 +18,16 @@ class PipelineSpec extends SparkSuite {
 
   private def events = Tables.events(spark, sf("sf0.001"))
 
-  /** `kb_aws=N` directory name → its files (name, mtime). */
+  /** A target's live directory: `v<n>` under its `_version` pointer, or
+    * the table root of a table written before versioning. */
+  private def liveDir(table: String): java.io.File = {
+    val v = VersionedDir(table)
+    if (v.current >= 0) v.dir(v.current) else new java.io.File(table)
+  }
+
+  /** `kb_aws=N` directory name → its files (name, mtime), in the live version. */
   private def bucketFiles(table: String): Map[String, Set[(String, Long)]] =
-    new java.io.File(table).listFiles().filter(_.getName.startsWith("kb_aws="))
+    liveDir(table).listFiles().filter(_.getName.startsWith("kb_aws="))
       .map(d => d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet"))
         .map(f => (f.getName, f.lastModified())).toSet)
       .toMap
@@ -509,7 +516,7 @@ class PipelineSpec extends SparkSuite {
     val victimIds = (1 to 64).map(_.toLong).filter(i => bucketOf(Seq(i)).head == victim)
       .filterNot(_ == 2L)
     merge(victimIds.map(i => (i, "x", "d")))
-    assert(!new java.io.File(s"$root/b/kb_aws=$victim").exists())
+    assert(!new java.io.File(liveDir(s"$root/b"), s"kb_aws=$victim").exists())
     assert(contents(bt) == want)
   }
 
@@ -578,13 +585,19 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("interrupted swap recovery: a surviving .old hop is restored, not lost") {
+    import graft.operators.Skew
     val root = Files.createTempDirectory("graft-recover").toString
     val spec = TableSpec("d", "t", Seq("id"))
     def stage(rows: Seq[(Long, String, String)]) = rows.toDF("id", "v", "op_aws")
+    // a table written before versioning: top-level kb_aws=N bucket dirs
+    def preVersioned(dir: String, rows: Seq[(Long, String)], nb: Int): Unit =
+      rows.toDF("id", "v").withColumn("kb_aws", Skew.keyBucket(Seq(col("id")), nb))
+        .write.partitionBy("kb_aws").parquet(dir)
+    preVersioned(s"$root/t", (1 to 32).map(i => (i.toLong, s"v$i")), 4)
     // per-bucket hop: crash left a bucket's only copy in its sibling hop
     val bt = new ParquetMergeTarget(s"$root/t", buckets = 4)
-    bt.merge(stage((1 to 32).map(i => (i.toLong, s"v$i", "c"))), spec)
     val all = contents(bt)
+    assert(all == (1 to 32).map(i => (i.toLong, s"v$i")).toMap)
     val someBucket = new java.io.File(s"$root/t").listFiles()
       .filter(_.getName.startsWith("kb_aws=")).head
     assert(someBucket.renameTo(new java.io.File(s"$root/t.old-${someBucket.getName}")))
@@ -595,9 +608,11 @@ class PipelineSpec extends SparkSuite {
     assert(other.renameTo(new java.io.File(s"$root/t.old-${other.getName}")))
     bt.merge(stage(Seq((1L, "v1x", "u"))), spec)
     assert(contents(bt) == all + (1L -> "v1x"))
+    // the merge migrated the table: only the version, pointer and lock remain
+    assert(new java.io.File(s"$root/t").list().toSet == Set("v0", "_version", "_lock"))
     // whole-table hop (one bucket): same crash shape on the table directory itself
     val pt = new ParquetMergeTarget(s"$root/p", buckets = 1)
-    pt.merge(stage(Seq((1L, "a", "c"), (2L, "b", "c"))), spec)
+    preVersioned(s"$root/p", Seq((1L, "a"), (2L, "b")), 1)
     assert(new java.io.File(s"$root/p").renameTo(new java.io.File(s"$root/p.old")))
     assert(contents(pt) == Map(1L -> "a", 2L -> "b"))
   }
@@ -628,12 +643,96 @@ class PipelineSpec extends SparkSuite {
     // first merge migrates and applies the batch
     val bt = new ParquetMergeTarget(s"$root/t", buckets = 4)
     bt.merge(stage(Seq((1L, "v1x", "u"), (2L, "x", "d"), (21L, "v21", "c"))), spec)
-    assert(new java.io.File(s"$root/t").listFiles().exists(_.getName.startsWith("kb_aws=")))
+    assert(liveDir(s"$root/t").listFiles().exists(_.getName.startsWith("kb_aws=")))
     val got = contents(bt)
     assert(got.size == 20 && got(1L) == "v1x" && !got.contains(2L) && got(21L) == "v21")
     // and the next merge takes the pruned per-bucket path on the new layout
     bt.merge(stage(Seq((3L, "v3x", "u"))), spec)
     assert(contents(bt).get(3L).contains("v3x"))
+  }
+
+  /** Copy the regular files of `from` into `to` (created if missing). */
+  private def copyFiles(from: java.io.File, to: java.io.File): Unit = {
+    to.mkdirs()
+    from.listFiles().filter(_.isFile).foreach(f =>
+      Files.copy(f.toPath, new java.io.File(to, f.getName).toPath))
+  }
+
+  test("versioned target: a lazy snapshot taken before a merge reads the pre-batch rows after it") {
+    val root = Files.createTempDirectory("graft-lazy").toString
+    val spec = TableSpec("d", "t", Seq("id"))
+    val bt = new ParquetMergeTarget(s"$root/t", buckets = 4)
+    val b1 = (1 to 32).map(i => (i.toLong, s"a$i", "c"))
+    bt.merge(b1.toDF("id", "v", "op_aws"), spec)
+    val lazySnap = bt.snapshot(spark)
+    // the next batch rewrites every bucket
+    val b2 = (1 to 32).map(i => (i.toLong, s"b$i", "u"))
+    bt.merge(b2.toDF("id", "v", "op_aws"), spec)
+    assert(lazySnap.select("id", "v").as[(Long, String)].collect().toMap == upsertFold(Map.empty, b1))
+    assert(contents(bt) == upsertFold(Map.empty, b2))
+  }
+
+  test("versioned target: a concurrent reader only ever sees a whole table state") {
+    val root = Files.createTempDirectory("graft-isolation").toString
+    val spec = TableSpec("d", "t", Seq("id"))
+    val bt = new ParquetMergeTarget(s"$root/t", buckets = 8)
+    // every batch rewrites all 64 keys, so all 8 buckets
+    def batch(k: Int) = (1 to 64).map(i => (i.toLong, s"s$k-$i", if (k == 0) "c" else "u"))
+    val states = (0 to 5).map(k => upsertFold(Map.empty, batch(k)))
+    bt.merge(batch(0).toDF("id", "v", "op_aws"), spec)
+    @volatile var writing = true
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[scala.util.Try[Map[Long, String]]]()
+    val reader = new Thread(() => {
+      do seen.add(scala.util.Try(contents(bt))) while (writing)
+    })
+    reader.start()
+    try (1 to 5).foreach(k => bt.merge(batch(k).toDF("id", "v", "op_aws"), spec))
+    finally { writing = false; reader.join() }
+    val reads = seen.toArray(Array.empty[scala.util.Try[Map[Long, String]]]).toSeq
+    assert(reads.nonEmpty)
+    reads.foreach(r => assert(states.contains(r.get), "a reader saw a mixed table"))
+    assert(contents(bt) == states.last)
+  }
+
+  test("versioned target: a partial uncommitted version is invisible and its replay converges") {
+    val root = Files.createTempDirectory("graft-partial").toString
+    val spec = TableSpec("d", "t", Seq("id"))
+    def stage(rows: Seq[(Long, String, String)]) = rows.toDF("id", "v", "op_aws")
+    val b1 = (1 to 32).map(i => (i.toLong, s"a$i", "c"))
+    val b2 = (1 to 32 by 3).map(i => (i.toLong, s"b$i", if (i % 2 == 0) "d" else "u")) :+ ((40L, "b40", "c"))
+    val bt = new ParquetMergeTarget(s"$root/t", buckets = 4)
+    val twin = new ParquetMergeTarget(s"$root/twin", buckets = 4)
+    Seq(bt, twin).foreach(_.merge(stage(b1), spec))
+    twin.merge(stage(b2), spec)
+    // the crash: one bucket of b2's version landed, the pointer never moved
+    val landed = liveDir(s"$root/twin").listFiles().filter(_.getName.startsWith("kb_aws=")).head
+    copyFiles(landed, new java.io.File(s"$root/t/v1/${landed.getName}"))
+    assert(VersionedDir(s"$root/t").current == 0)
+    assert(contents(bt) == upsertFold(Map.empty, b1))
+    bt.merge(stage(b2), spec) // the checkpoint replay
+    assert(contents(bt) == upsertFold(upsertFold(Map.empty, b1), b2))
+    assertOneFilePerBucket(s"$root/t")
+  }
+
+  test("versioned target: a merge while another writer holds the lock fails fast and leaves the table unchanged") {
+    val root = Files.createTempDirectory("graft-locked").toString
+    val spec = TableSpec("d", "t", Seq("id"))
+    val bt = new ParquetMergeTarget(s"$root/t", buckets = 4)
+    val b1 = (1 to 32).map(i => (i.toLong, s"a$i", "c"))
+    bt.merge(b1.toDF("id", "v", "op_aws"), spec)
+    val files = bucketFiles(s"$root/t")
+    // hold the table's lock the way another writer process would
+    val ch = java.nio.channels.FileChannel.open(java.nio.file.Paths.get(s"$root/t/_lock"),
+      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
+    val held = ch.lock()
+    try {
+      val e = intercept[IllegalArgumentException] {
+        bt.merge(Seq((1L, "x", "u")).toDF("id", "v", "op_aws"), spec)
+      }
+      assert(e.getMessage.contains("single-writer"))
+    } finally { held.release(); ch.close() }
+    assert(contents(bt) == upsertFold(Map.empty, b1))
+    assert(bucketFiles(s"$root/t") == files)
   }
 
   test("super_as_variant: variant column survives bucketed merge + replay, variant_get readable") {
@@ -785,7 +884,7 @@ class PipelineSpec extends SparkSuite {
     q.awaitTermination(120000)
     // the factory's targets are bucketed: kb_aws partition dirs on disk,
     // snapshot hides the layout column
-    assert(new java.io.File(s"$root/targets/t0").listFiles()
+    assert(liveDir(s"$root/targets/t0").listFiles()
       .exists(_.getName.startsWith("kb_aws=")))
     val snap = sinkFor(t0).snapshot(spark)
     assert(!snap.columns.contains("kb_aws"))
@@ -920,9 +1019,11 @@ class PipelineSpec extends SparkSuite {
     val b3 = Seq((2L, 30L, 2L, 300L, "d"))
     run(b1)
     assertOneFilePerBucket(s"$dir/t0")
-    val loneDir = new java.io.File(s"$dir/t0/kb_aws=${bucketOf(lone)}")
-    assert(loneDir.exists())
-    val before = loneDir.listFiles().map(f => (f.getName, f.lastModified())).toSet
+    val loneBucket = s"kb_aws=${bucketOf(lone)}"
+    assert(new java.io.File(liveDir(s"$dir/t0"), loneBucket).exists())
+    def loneFiles = new java.io.File(liveDir(s"$dir/t0"), loneBucket).listFiles()
+      .map(f => (f.getName, f.lastModified())).toSet
+    val before = loneFiles
     run(b2)
     assertOneFilePerBucket(s"$dir/t0")
     run(b3)
@@ -940,7 +1041,7 @@ class PipelineSpec extends SparkSuite {
     assert(hist(snap) == hist(oracle))
     assert(hist(snap).nonEmpty)
     // the lone key's bucket was never rewritten after b1
-    val after = loneDir.listFiles().map(f => (f.getName, f.lastModified())).toSet
+    val after = loneFiles
     assert(after == before, "untouched bucket was rewritten")
   }
 }

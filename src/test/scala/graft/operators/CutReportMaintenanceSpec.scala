@@ -71,13 +71,7 @@ class CutReportMaintenanceSpec extends SparkSuite {
         s"curatedCorpus must equal q296's reconstruction on kept docs; " +
           s"extra=${(curated -- expected).take(3)} " +
           s"missing=${(expected -- curated).take(3)}")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally VersionedDir.deleteTree(new java.io.File(dir))
   }
 
   test("maintained cut report on a STREAM: foreachBatch ingests converge to the batch replay; a replayed batch is skipped") {
@@ -137,13 +131,7 @@ class CutReportMaintenanceSpec extends SparkSuite {
       q3.stop()
       assert(CutReportMaintenance.report(spark, dir).count() == before.size + 2,
         "a new lineage's batch 0 must apply, not be mistaken for a replay")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally VersionedDir.deleteTree(new java.io.File(dir))
   }
 
   test("maintained cut report: compaction mid-stream preserves convergence and drops superseded segments") {
@@ -206,13 +194,7 @@ class CutReportMaintenanceSpec extends SparkSuite {
         .localCheckpoint(true)
       corrupted.write.mode("overwrite").parquet(newestRep)
       assert(CutReportMaintenance.verifyAgainstReplay(spark, dir).count() == 1)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally VersionedDir.deleteTree(new java.io.File(dir))
   }
 
   test("maintained cut report: a second concurrent writer fails fast; mismatched params are refused") {
@@ -247,13 +229,7 @@ class CutReportMaintenanceSpec extends SparkSuite {
           CutReportMaintenance.Params(W = 30))
       }
       assert(e3.getMessage.contains("mismatched"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally VersionedDir.deleteTree(new java.io.File(dir))
   }
 
   test("maintained cut report: the embedding tier converges — interleaved ingests with vectors equal the replay, twins land as embdup") {
@@ -331,20 +307,8 @@ class CutReportMaintenanceSpec extends SparkSuite {
         assert(streamed == batchRep,
           s"extra=${(streamed -- batchRep).take(5)} " +
             s"missing=${(batchRep -- streamed).take(5)}")
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(new java.io.File(dir2))
-      }
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+      } finally VersionedDir.deleteTree(new java.io.File(dir2))
+    } finally VersionedDir.deleteTree(new java.io.File(dir))
   }
 
   test("maintained cut report: deleteDocs repairs survivors and converges to the replay over the surviving corpus; compaction purges") {
@@ -409,13 +373,7 @@ class CutReportMaintenanceSpec extends SparkSuite {
           f.getName.drop(1).toLong >= floor)
       assert(liveTombSegs.isEmpty,
         "compaction must clear the doc tombstones it purged")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally VersionedDir.deleteTree(new java.io.File(dir))
   }
 
   test("maintained cut report: hash-bucketed compaction — every keyed table multi-bucket, pruned probes, convergence intact") {
@@ -461,13 +419,7 @@ class CutReportMaintenanceSpec extends SparkSuite {
         assert(CutReportMaintenance.report(spark, dir)
           .as[(Long, String, Option[Long], Long)].collect().toSet == batch)
       } finally spark.conf.unset("spark.graft.cutmaint.targetBucketRows")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally VersionedDir.deleteTree(new java.io.File(dir))
   }
 
   test("bucket manifest: _pbset records exactly the nonempty partitions; a manifest-less dir degrades to the File probe with identical results") {
@@ -518,13 +470,7 @@ class CutReportMaintenanceSpec extends SparkSuite {
             s"extra=${(maintained -- batch).take(5)} " +
             s"missing=${(batch -- maintained).take(5)}")
       } finally spark.conf.unset("spark.graft.cutmaint.targetBucketRows")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally VersionedDir.deleteTree(new java.io.File(dir))
   }
 
   test("maintained cut report: the doc_id contract fails fast — live, tombstoned, and in-batch-repeated ids are refused without touching state") {
@@ -570,13 +516,7 @@ class CutReportMaintenanceSpec extends SparkSuite {
         corpus.filter(col("doc_id") === 3L))
       assert(CutReportMaintenance.report(spark, dir).count() == before.size)
       assert(CutReportMaintenance.verifyAgainstReplay(spark, dir).count() == 0)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally VersionedDir.deleteTree(new java.io.File(dir))
   }
 
   test("maintained cut report: takedown stream — interleaved ingest/delete streams converge to the replay over survivors; a replayed delete batch is skipped") {
@@ -634,13 +574,7 @@ class CutReportMaintenanceSpec extends SparkSuite {
       assert(version() == v0, "a redelivered delete batchId must be skipped")
       assert(CutReportMaintenance.report(spark, dir)
         .as[(Long, String, Option[Long], Long)].collect().toSet == batch)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally VersionedDir.deleteTree(new java.io.File(dir))
   }
 
   test("maintained cut report: a pre-r15 or foreign state-dir layout is refused, not misread") {
@@ -676,13 +610,7 @@ class CutReportMaintenanceSpec extends SparkSuite {
           CutReportMaintenance.Params(vecBits = 9, vecBands = 2))
       }
       assert(e3.getMessage.contains("vecBits"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally VersionedDir.deleteTree(new java.io.File(dir))
   }
 
   test("maintained cut report: a crashed writer's orphan segments are purged by the next committed operation, whatever it writes") {
@@ -716,13 +644,54 @@ class CutReportMaintenanceSpec extends SparkSuite {
           s"missing=${(batch -- maintained).take(5)}")
       assert(before.forall(r => maintained.exists(_._1 == r._1)))
       assert(CutReportMaintenance.verifyAgainstReplay(spark, dir).count() == 0)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
+    } finally VersionedDir.deleteTree(new java.io.File(dir))
+  }
+
+  test("maintained cut report: a malformed spark.graft.cutmaint.* conf fails at entry naming its key, before any segment lands") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cutmaint-conf").toString
+    try {
+      val corpus = plantedCorpus.limit(20).localCheckpoint(true)
+      CutReportMaintenance.ingest(spark, dir, corpus)
+      def version = VersionedDir(dir).current
+      def report = CutReportMaintenance.report(spark, dir).collect().toSet
+      val (v0, report0) = (version, report)
+      for (key <- Seq("segmentWriteFiles", "deltaShufflePartitions", "targetBucketRows")) {
+        val k = s"spark.graft.cutmaint.$key"
+        spark.conf.set(k, "abc")
+        try {
+          Seq[() => Any](
+            () => CutReportMaintenance.ingest(spark, dir, corpus),
+            () => CutReportMaintenance.deleteDocs(spark, dir, corpus.select("doc_id").limit(1)),
+            () => CutReportMaintenance.applyOps(spark, dir, corpus),
+            () => CutReportMaintenance.compact(spark, dir)).foreach { call =>
+            val e = intercept[IllegalArgumentException](call())
+            assert(e.getMessage.contains(k) && e.getMessage.contains("abc"), e.getMessage)
+          }
+        } finally spark.conf.unset(k)
+        assert(version == v0)
+        assert(report == report0)
       }
-      rm(new java.io.File(dir))
-    }
+    } finally VersionedDir.deleteTree(new java.io.File(dir))
+  }
+
+  test("applyOps prep drain: a task outliving the timeout is interrupted and the drain fails naming the state dir") {
+    import scala.concurrent.duration._
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
+    val latch = new java.util.concurrent.CountDownLatch(1)
+    val interrupted = new java.util.concurrent.CountDownLatch(1)
+    pool.submit(new Runnable {
+      def run(): Unit =
+        try latch.await()
+        catch { case _: InterruptedException => interrupted.countDown() }
+    })
+    try {
+      val e = intercept[IllegalStateException] {
+        CutReportMaintenance.drain(pool, 100.millis, "/state/dir")
+      }
+      assert(e.getMessage.contains("/state/dir"))
+      assert(interrupted.await(10, SECONDS), "the blocked task was not interrupted")
+      assert(pool.awaitTermination(10, SECONDS))
+    } finally latch.countDown()
   }
 
   test("maintained cut report: single full-corpus ingest equals the batch replay (degenerate base case)") {
@@ -736,13 +705,7 @@ class CutReportMaintenanceSpec extends SparkSuite {
       val batch = graft.QueriesExt11.cutReportOf(corpus)
         .as[(Long, String, Option[Long], Long)].collect().toSet
       assert(maintained == batch)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally VersionedDir.deleteTree(new java.io.File(dir))
   }
 
   test("parallel segment landing: a failing task's error escapes only after EVERY sibling task completes — no landing write can outlive the writer lock") {

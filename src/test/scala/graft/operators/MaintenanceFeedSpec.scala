@@ -13,13 +13,7 @@ import org.apache.spark.sql.functions._
 class MaintenanceFeedSpec extends SparkSuite {
   import spark.implicits._
 
-  private def rm(path: String): Unit = {
-    def go(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(go))
-      f.delete(); ()
-    }
-    go(new java.io.File(path))
-  }
+  private def rm(path: String): Unit = VersionedDir.deleteTree(new java.io.File(path))
 
   private def corpusRows = Tables.documents(spark, sf("sf0.001"))
     .select(col("doc_id"),
