@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** Bench harness: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Queries are materialized through the `noop` sink
@@ -18,26 +24,20 @@ import org.apache.spark.sql.SparkSession
   * reported (declared as "reps" in the JSON): single-run numbers on a
   * shared host swing 3-4× with neighbor load (observed: the same 5000-doc
   * hash-aggregate at 1.8s and 5.9s in consecutive runs), and min-of-N is
-  * the standard way to report the machine's actual capability. */
+  * the standard way to report the machine's actual capability.
+  *
+  * Beside each time, the detail records the query's Spark job count
+  * ("jobs": every job started during its first successful run — the
+  * load-invariant cross-check, since job counts do not swing with
+  * neighbor load). SPARK_GRAFT_JOBCOUNT_TRACE=1 also prints that run's
+  * per-callsite job histogram to stderr (`[jobsite] query n callsite`),
+  * so a fusion round knows WHICH eager action still pays round-trips.
+  * Per-query counts: SPARK_GRAFT_BENCH_ONLY=q298_... sbt "runMain
+  * graft.Bench", then read "jobs" in BENCH_DETAIL_PARTIAL.json. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Launch.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Static conf, must be set at build time: the default 100-entry
-      // generated-class cache thrashes when ~80 queries' stages cycle
-      // through it each interleaved pass, recompiling every rep (observed:
-      // the same query at 1.6s alone vs 5.1s interleaved with one other).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.graft.spreadSmallScans", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Launch.session(Launch.Registry)
     // Untimed: materialize the synthesized Kafka-batch stand-ins, plus one
     // cheap fixed warm-up action so JVM/codegen startup is not billed to
     // the first timed query. A warm failure is flagged in the JSON line —
@@ -70,12 +70,39 @@ object Bench {
     // sweep value inflated by neighbor load carries its own evidence.
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     def load1m: Double = math.max(osBean.getSystemLoadAverage, 0.0)
+    val trace = sys.env.get("SPARK_GRAFT_JOBCOUNT_TRACE").contains("1")
+    val nJobs = new AtomicLong(0)
+    val sites = new ConcurrentHashMap[String, AtomicLong]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        nJobs.incrementAndGet()
+        if (trace) {
+          // The result stage's name is the action's short callsite.
+          val site = j.stageInfos.lastOption.map(_.name).getOrElse("?")
+          sites.computeIfAbsent(site, _ => new AtomicLong(0)).incrementAndGet()
+        }
+        ()
+      }
+    })
+    val jobs = scala.collection.mutable.Map.empty[String, Long]
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Option[(Double, Double)] = {
+      // Every job of the previous query has been counted before the
+      // reset, and every job of this one before the read.
+      SessionBridge.awaitListeners(spark)
+      nJobs.set(0); sites.clear()
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Some(((System.nanoTime() - t0) / 1e9, load1m))
+        val secs = (System.nanoTime() - t0) / 1e9
+        SessionBridge.awaitListeners(spark)
+        if (!jobs.contains(name)) {
+          jobs(name) = nJobs.get()
+          if (trace) sites.asScala.toSeq.sortBy(-_._2.get()).foreach { case (s, c) =>
+            System.err.println(s"[jobsite] $name ${c.get()} $s")
+          }
+        }
+        Some((secs, load1m))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         None
@@ -305,7 +332,9 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" +
         String.format(java.util.Locale.ROOT, "%.2f", Double.box(v)) }
       .mkString("{", ",", "}")
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","reps":$reps$spine$spineIso$warm$driftDetail$streamProbe,"queries":$qs,"load_1m":$loadJson}"""
+    val jobsJson = jobs.toSeq.sortBy(_._1)
+      .map { case (k, n) => "\"" + k + "\":" + n }.mkString("{", ",", "}")
+    val detail = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","reps":$reps$spine$spineIso$warm$driftDetail$streamProbe,"queries":$qs,"load_1m":$loadJson,"jobs":$jobsJson}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
       (detail + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>

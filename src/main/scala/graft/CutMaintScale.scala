@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Throughput measurement for the maintained cut report (the r13
@@ -47,14 +47,7 @@ object CutMaintScale {
     val steadyBatches = args.lift(2).map(_.toInt).getOrElse(12)
     val compactEvery = args.lift(3).map(_.toInt).getOrElse(4)
     require(batches >= 2, "need at least 2 batches to exercise maintenance")
-    val spark = SparkSession.builder()
-      .master(s"local[${Launch.cpus}]")
-      .config("spark.sql.shuffle.partitions", Launch.cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Launch.session(Launch.Tool)
     val root = java.nio.file.Files.createTempDirectory("graft-cutmaint").toString
     try {
       val corpus = Tables.documents(spark, sfDir)

@@ -1,17 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
-/** Audit main (sibling of [[WindowAudit]]): runs every declared query
-  * at a small sf and reports each one whose EXECUTED plan contains a
-  * `BroadcastNestedLoopJoinExec` or `CartesianProductExec` whose
-  * SMALLER side produced more than [[smallSideMax]] rows — the
-  * all-pairs shape that breaks at 100×. Singleton/tiny sides (scalar
-  * aggregates crossJoined for a closed form, literal grids, ≤200-row
-  * replicate frames) are the legitimate uses and pass the bound.
-  * Zero output rows = clean. Usage: runMain graft.JoinAudit [sfDir] */
+/** Plan walker for [[AuditAll]]'s join check (sibling of
+  * [[WindowAudit]]): finds every `BroadcastNestedLoopJoinExec` or
+  * `CartesianProductExec` in an EXECUTED plan whose SMALLER side
+  * produced more than [[smallSideMax]] rows — the all-pairs shape that
+  * breaks at 100×. Singleton/tiny sides (scalar aggregates crossJoined
+  * for a closed form, literal grids, ≤200-row replicate frames) are the
+  * legitimate uses and pass the bound. */
 object JoinAudit {
 
   /** A non-equi join side bigger than this is an offender. Chosen an
@@ -56,38 +54,6 @@ object JoinAudit {
 
   /** Executes `df` and returns every non-equi join in its final
     * (AQE-resolved) plan whose smaller side exceeded the bound. */
-  def oversizedNonEquiJoins(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-    df.collect() // finalize AQE + populate metrics
-    df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => offenders(a.executedPlan)
-      case p => offenders(p)
-    }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${Launch.cpus}]")
-      .config("spark.sql.shuffle.partitions", Launch.cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.graft.spreadSmallScans", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var bad = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val hits = oversizedNonEquiJoins(fn(spark, sfDir))
-        if (hits.nonEmpty) {
-          bad += 1
-          println(s"[join-audit] $name: ${hits.mkString("; ")}")
-        }
-      } catch { case e: Throwable =>
-        println(s"[join-audit] $name ERROR: ${e.getMessage}")
-      }
-    }
-    println(s"[join-audit] done, $bad offender(s)")
-    spark.stop()
-  }
+  def oversizedNonEquiJoins(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    offenders(AuditAll.finalPlan(df))
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator: derives an sf1-equivalent dataset (10× sf0.1)
@@ -83,13 +83,7 @@ object ScaleUp {
     require(copies >= 1 && copies <= 64,
       s"copies must be in [1, 64] (got $copies): beyond that the " +
         "per-copy embedding rotations repeat")
-    val spark = SparkSession.builder()
-      .master(s"local[${Launch.cpus}]")
-      .config("spark.sql.shuffle.partitions", Launch.cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Launch.session(Launch.Tool)
 
     val cp = broadcast(spark.range(copies).select(col("id").as("__c")))
     def load(t: String) = spark.read.parquet(s"$src/$t.parquet")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Testdata-schema smoke gate (VERDICT r7 "what's wrong" #4): the driver
   * regenerates `/root/testdata` between rounds and has changed physical
   * types under us before (events.ts: int64-nanos → timestamp[us], which
@@ -19,12 +17,7 @@ object Smoke {
 
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Launch.session(Launch.Local4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val sfDirs = new java.io.File(base).listFiles()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.envelope.FlinkDebeziumCdc
@@ -41,15 +41,7 @@ object SpineScale {
     val sfDir = args.headOption.getOrElse("/root/repo/scaledata/sf1")
     val copies = args.lift(1).map(_.toInt).getOrElse(100)
     val reps = args.lift(2).map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${Launch.cpus}]")
-      .config("spark.sql.shuffle.partitions", Launch.cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Launch.session(Launch.Tool)
 
     val tmp = java.nio.file.Files.createTempDirectory("graft-spinescale").toString
     try {

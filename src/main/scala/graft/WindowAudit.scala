@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
-/** Audit main: runs every declared query at a small sf and reports each
-  * one whose EXECUTED plan contains a WindowExec/WindowGroupLimitExec
-  * with an empty partition spec — the "Moving all data to a single
-  * partition" shape that breaks at 100×. Zero output rows = clean.
-  * Usage: runMain graft.WindowAudit [sfDir] */
+/** Plan walker for [[AuditAll]]'s window check: finds every
+  * WindowExec/WindowGroupLimitExec with an empty partition spec in an
+  * EXECUTED plan — the "Moving all data to a single partition" shape
+  * that breaks at 100×. */
 object WindowAudit {
   private[graft] def unpartitioned(p: SparkPlan): Seq[String] = p.collect {
     case a: AdaptiveSparkPlanExec => unpartitioned(a.executedPlan)
@@ -24,35 +22,6 @@ object WindowAudit {
     * THE shared walker — PlanSpec and PrefixScanSpec pin through this
     * same traversal, so a new Spark wrapper node type only needs
     * handling here. */
-  def unpartitionedWindows(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-    df.collect() // finalize AQE
-    df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => unpartitioned(a.executedPlan)
-      case p => unpartitioned(p)
-    }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${Launch.cpus}]")
-      .config("spark.sql.shuffle.partitions", Launch.cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.graft.spreadSmallScans", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var bad = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val hits = unpartitionedWindows(fn(spark, sfDir))
-        if (hits.nonEmpty) { bad += 1; println(s"[window-audit] $name: ${hits.size} single-partition window(s)") }
-      } catch { case e: Throwable =>
-        println(s"[window-audit] $name ERROR: ${e.getMessage}")
-      }
-    }
-    println(s"[window-audit] done, $bad offender(s)")
-    spark.stop()
-  }
+  def unpartitionedWindows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    unpartitioned(AuditAll.finalPlan(df))
 }

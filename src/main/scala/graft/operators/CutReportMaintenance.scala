@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import org.apache.spark.sql.graftbridge.SessionBridge
+
 import graft.functions.{DedupFunctions, ExactSubstrings, Similarity, TextFunctions}
 
 /** MAINTAINED composed cut report — the persistent-state form of the
@@ -468,7 +470,7 @@ object CutReportMaintenance {
   /** Per-ingest segments are BATCH-grain by contract (never O(corpus)),
     * so their file count is bounded explicitly instead of relying on
     * AQE coalescing (disabled inside the delta-grain writers, see
-    * [[withDeltaGrainConf]]): default one file per table per version —
+    * [[onDeltaGrain]]): default one file per table per version —
     * the LSM layout compaction folds anyway — overridable for
     * deployments whose micro-batches are big enough to want parallel
     * segment writes (`spark.graft.cutmaint.segmentWriteFiles`). */
@@ -479,42 +481,40 @@ object CutReportMaintenance {
     w.write.mode("overwrite").parquet(s"$stateDir/seg_$name/v$version")
   }
 
-  /** Run `body` with AQE off on the session, restoring the previous
-    * setting after — the delta-grain writers' job-count fix (r18,
-    * measured): AQE materializes EVERY exchange of every eager action
-    * as its own stage job (241 of 299 Spark jobs in one traced q298
-    * run were AQE stage jobs, 544 of 652 in q300), and per-batch
-    * maintenance frames are O(batch + touched) by contract — there is
-    * no skew to split and nothing to coalesce that [[writeSegment]]'s
-    * explicit file bound does not already handle, while each stage job
-    * costs a full driver round-trip (network on a real cluster). A
-    * static plan also lets independent stages of one action launch
-    * together instead of through AQE's materialize-replan waves.
-    * Scope: ingest/delete/applyOps only — compact() folds the CORPUS,
-    * where AQE's coalescing genuinely earns its jobs, and the serving
-    * reads (report/curatedCorpus/maintainedView) plan outside this
-    * scope with the session's own setting. */
-  private def withDeltaGrainConf[T](spark: SparkSession)(body: => T): T = {
-    // With AQE no longer coalescing, the delta frames' shuffles need a
-    // static partition count sized for MICRO-BATCH grain, not for the
-    // session's corpus-grain setting: at the guide's 100 MB–1 GB per
-    // shuffle partition, a delta batch stays within the default up to
-    // ~1 GB of batch — deployments ingesting bigger micro-batches set
-    // `spark.graft.cutmaint.deltaShufflePartitions` (this is the same
-    // number AQE's coalescing converged to at measured batch sizes, as
-    // a static conf instead of per-exchange replanning jobs).
-    val kAqe = "spark.sql.adaptive.enabled"
-    val kShuf = "spark.sql.shuffle.partitions"
-    val deltaParts = deltaShufflePartitions(spark)
-    val prevAqe = spark.conf.getOption(kAqe)
-    val prevShuf = spark.conf.getOption(kShuf)
-    spark.conf.set(kAqe, "false")
-    spark.conf.set(kShuf, deltaParts.toString)
-    try body
-    finally {
-      prevAqe.fold(spark.conf.unset(kAqe))(v => spark.conf.set(kAqe, v))
-      prevShuf.fold(spark.conf.unset(kShuf))(v => spark.conf.set(kShuf, v))
-    }
+  /** Run `body` on a delta-grain clone of `spark`, with `in` rebound
+    * onto the clone and `body`'s result rebound onto `spark` — the
+    * delta-grain writers' job-count fix (r18, measured): AQE
+    * materializes EVERY exchange of every eager action as its own stage
+    * job (241 of 299 Spark jobs in one traced q298 run were AQE stage
+    * jobs, 544 of 652 in q300), and per-batch maintenance frames are
+    * O(batch + touched) by contract — there is no skew to split and
+    * nothing to coalesce that [[writeSegment]]'s explicit file bound
+    * does not already handle, while each stage job costs a full driver
+    * round-trip (network on a real cluster). A static plan also lets
+    * independent stages of one action launch together instead of
+    * through AQE's materialize-replan waves.
+    *
+    * The clone (`cloneSession`, not `newSession`: it keeps the caller's
+    * runtime conf, e.g. `spark.graft.cutmaint.*`, functions and temp
+    * views) takes AQE off and a static partition count sized for
+    * MICRO-BATCH grain: at the guide's 100 MB–1 GB per shuffle
+    * partition, a delta batch stays within the default up to ~1 GB of
+    * batch — deployments ingesting bigger micro-batches set
+    * `spark.graft.cutmaint.deltaShufflePartitions` (the number AQE's
+    * coalescing converged to at measured batch sizes, as a static conf
+    * instead of per-exchange replanning jobs). The caller's session is
+    * never written, so a concurrent query or a second state dir plans
+    * with its own conf throughout; the returned frame plans under the
+    * caller's conf, as before. Scope: ingest/delete/applyOps only —
+    * compact() folds the CORPUS, where AQE's coalescing genuinely earns
+    * its jobs, and the serving reads (report/curatedCorpus/
+    * maintainedView) run on the caller's session. */
+  private def onDeltaGrain(spark: SparkSession, in: DataFrame)(
+      body: (SparkSession, DataFrame) => DataFrame): DataFrame = {
+    val delta = SessionBridge.cloneSession(spark)
+    delta.conf.set("spark.sql.adaptive.enabled", "false")
+    delta.conf.set("spark.sql.shuffle.partitions", deltaShufflePartitions(spark).toString)
+    SessionBridge.rebind(body(delta, SessionBridge.rebind(in, delta)), spark)
   }
 
   /** Land independent per-version segments CONCURRENTLY (guide §2.6 —
@@ -1204,8 +1204,8 @@ object CutReportMaintenance {
       checkConfs(spark)
       checkLayout(stateDir)
       requireOrPersistParams(stateDir, p)
-      withDeltaGrainConf(spark) {
-        ingestLocked(spark, stateDir, batch, p, appliedMarker)
+      onDeltaGrain(spark, batch) { (delta, b) =>
+        ingestLocked(delta, stateDir, b, p, appliedMarker)
       }
     }
 
@@ -1719,8 +1719,8 @@ object CutReportMaintenance {
       checkConfs(spark)
       checkLayout(stateDir)
       requireOrPersistParams(stateDir, p)
-      withDeltaGrainConf(spark) {
-        deleteLocked(spark, stateDir, ids, p, appliedMarker)
+      onDeltaGrain(spark, ids) { (delta, in) =>
+        deleteLocked(delta, stateDir, in, p, appliedMarker)
       }
     }
 
@@ -2502,7 +2502,8 @@ object CutReportMaintenance {
       streamId.foreach(s => require(s.nonEmpty && s.forall(c =>
         c.isLetterOrDigit || c == '-' || c == '_'),
         s"streamId '$s' must be a filesystem-safe token"))
-      withDeltaGrainConf(spark) {
+      // The body sees only the delta-grain session and the rebound batch.
+      onDeltaGrain(spark, batch) { (spark, batch) =>
       def halfDone(half: String): Boolean = streamId.exists(s =>
         batchId >= 0 && batchId <= appliedBatch(stateDir, s"$s-$half"))
       def halfMarker(half: String): Option[(String, Long)] =

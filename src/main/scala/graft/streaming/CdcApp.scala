@@ -20,22 +20,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object CdcApp {
 
-  def session(appName: String, workers: Int): SparkSession = {
-    val b = SparkSession.builder()
-      .appName(appName)
-      // FAIR scheduling so the per-table concurrent jobs share executors
-      // (ref emr_ec2/cdc_redshift.py:30).
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Speculation duplicates staging writes (ref README.md:141).
-      .config("spark.speculation", "false")
-    // CDC micro-batches are small relative to the 200 default; 32 suits a
-    // single-host run and AQE coalesces further at runtime. A cluster
-    // submit that passes --conf spark.sql.shuffle.partitions wins.
-    (if (sys.props.contains("spark.sql.shuffle.partitions")) b
-     else b.config("spark.sql.shuffle.partitions", "32")).getOrCreate()
-  }
+  /** The stream session, from [[graft.Launch.session]]'s `Stream`
+    * profile. `workers` is unused; it is kept for the bench's binding
+    * (`perfbench` calls `CdcApp.session(appName, workers)`). */
+  def session(appName: String, workers: Int): SparkSession =
+    graft.Launch.session(graft.Launch.Stream, Some(appName))
 
   def sinkFactory(spark: SparkSession, sinkSpec: String,
                   cfg: JobConfig = JobConfig()): TableSpec => MergeTarget = {

@@ -147,13 +147,7 @@ object StreamScale {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copiesList = if (args.length > 1) args.drop(1).toSeq.map(_.toInt)
       else Seq(1, 10)
-    val spark = SparkSession.builder()
-      .master(s"local[${graft.Launch.cpus}]")
-      .config("spark.sql.shuffle.partitions", graft.Launch.cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Launch.session(graft.Launch.Tool)
     copiesList.foreach { c =>
       (run(spark, sfDir, c) ++ docStateProbes(spark, sfDir, c)).foreach { p =>
         println(f"[stream-scale] copies=$c%-3d ${p.name}%-6s rows=${p.rows}%-9d " +

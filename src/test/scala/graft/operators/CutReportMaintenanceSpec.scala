@@ -759,4 +759,69 @@ class CutReportMaintenanceSpec extends SparkSuite {
       (1 to 5).map(_ => () => { ok.incrementAndGet(); () }))
     assert(ok.get() == 5)
   }
+
+  private val kAqe = "spark.sql.adaptive.enabled"
+  private val kShuf = "spark.sql.shuffle.partitions"
+
+  test("delta-grain conf stays on the writer's clone: a concurrent thread sees the session default and plans adaptively mid-ingest") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cutmaint-iso").toString
+    try {
+      val corpus = plantedCorpus.localCheckpoint(true)
+      val default = (spark.conf.get(kShuf), spark.conf.get(kAqe))
+      val done = new java.util.concurrent.CountDownLatch(1)
+      val writer = new Thread(() =>
+        try CutReportMaintenance.ingest(spark, dir, corpus).count()
+        finally done.countDown())
+      writer.setDaemon(true)
+      writer.start()
+      // Thread B: conf reads and a corpus-grain plan on the shared
+      // session, for as long as the ingest runs.
+      val seen = scala.collection.mutable.Set.empty[(String, String)]
+      var plans, nonAdaptive = 0
+      while (done.getCount > 0) {
+        seen += ((spark.conf.get(kShuf), spark.conf.get(kAqe)))
+        val plan = Tables.documents(spark, sf("sf0.001"))
+          .groupBy(col("doc_id") % 7).count().queryExecution.executedPlan
+        plans += 1
+        if (!plan.isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec])
+          nonAdaptive += 1
+        Thread.sleep(5)
+      }
+      writer.join()
+      assert(plans >= 10, s"only $plans plans overlapped the ingest")
+      assert(seen == Set(default), s"thread B saw $seen, session default is $default")
+      assert(nonAdaptive == 0, s"$nonAdaptive of $plans concurrent plans were not adaptive")
+      assert(VersionedDir(dir).current == 0, "the ingest must have committed")
+    } finally VersionedDir.deleteTree(new java.io.File(dir))
+  }
+
+  test("the delta-grain clone carries the caller's runtime conf; the caller's AQE and shuffle partitions are unchanged after every writer") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cutmaint-clone").toString
+    val feedDir = java.nio.file.Files.createTempDirectory("graft-cutmaint-clonef").toString
+    val kFiles = "spark.graft.cutmaint.segmentWriteFiles"
+    spark.conf.set(kFiles, "2")
+    try {
+      val before = (spark.conf.getOption(kAqe), spark.conf.getOption(kShuf))
+      def unchanged(call: String): Unit = assert(
+        (spark.conf.getOption(kAqe), spark.conf.getOption(kShuf)) == before,
+        s"$call changed the caller's conf")
+      // Four input partitions, so a 2-file bound is visible as 2 files.
+      val corpus = plantedCorpus.limit(40).repartition(4).localCheckpoint(true)
+      CutReportMaintenance.ingest(spark, dir, corpus).count()
+      unchanged("ingest")
+      val parts = new java.io.File(s"$dir/seg_docs/v0").listFiles()
+        .map(_.getName).filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      assert(parts.length == 2, s"seg_docs/v0 holds ${parts.toSeq}")
+      CutReportMaintenance.deleteDocs(spark, dir, corpus.select("doc_id").limit(1)).count()
+      unchanged("deleteDocs")
+      CutReportMaintenance.applyOps(spark, feedDir,
+        Seq(("insert", 1L, "a first body of text"), ("insert", 2L, "a second body of text"))
+          .toDF("op", "ext_id", "text")).count()
+      unchanged("applyOps")
+    } finally {
+      spark.conf.unset(kFiles)
+      VersionedDir.deleteTree(new java.io.File(dir))
+      VersionedDir.deleteTree(new java.io.File(feedDir))
+    }
+  }
 }
