@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{SparkPlan, SQLExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** The round gate: one command that fails non-zero on ANY plan-shape
@@ -36,8 +36,8 @@ object AuditAll {
     * loads (Similarity centroids, BPE merge table), partition
     * boundaries (PrefixScan), touched-partition ids (MergeSink),
     * stream-metric finalizers (StreamAggs) and Smoke's table probe.
-    * The audit walkers' one execution, [[finalPlan]], lives in this
-    * file, which the census skips. */
+    * The audit walkers' one execution, [[finalPlan]], collects no rows
+    * (and this file is outside the census). */
   val collectAllowlist: Map[String, Int] = Map(
     "Similarity.scala" -> 5,
     "QueriesExt.scala" -> 3,
@@ -100,10 +100,15 @@ object AuditAll {
     }
 
   /** Executes `df` and returns its final plan, unwrapped from AQE — the
-    * one "execute, then unwrap" every audit walker reads. */
+    * one "execute, then unwrap" every audit walker reads. The rows stay
+    * on the executors: the walkers read only the plan and its metrics,
+    * and collecting an all-pairs join to the driver is the very blow-up
+    * [[JoinAudit]] exists to catch. */
   private[graft] def finalPlan(df: org.apache.spark.sql.DataFrame): SparkPlan = {
-    df.collect() // finalize AQE + populate metrics
-    df.queryExecution.executedPlan match {
+    val qe = df.queryExecution
+    // Finalize AQE + populate metrics, under an execution id as an action would.
+    SQLExecution.withNewExecutionId(qe, Some("audit"))(qe.executedPlan.execute().foreach(_ => ()))
+    qe.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
