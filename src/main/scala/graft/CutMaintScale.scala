@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** Throughput measurement for the maintained cut report (the r13
   * flagship, r14: segment-maintained report/pairs), FOUR workload arms
@@ -231,6 +232,12 @@ object CutMaintScale {
       }
       def idRange(loExcl: Long, hiIncl: Long) =
         corpus.filter(col("doc_id") > loExcl && col("doc_id") <= hiIncl)
+      // The probe's tiny bucket target is set on a clone that runs only
+      // the probe's ingests, so it never reaches `spark`'s conf.
+      val probeSpark = SessionBridge.cloneSession(spark)
+      probeSpark.conf.set("spark.graft.cutmaint.targetBucketRows", probeTarget.toString)
+      def probeIngest(b: DataFrame): Unit =
+        operators.CutReportMaintenance.ingest(probeSpark, probeDir, SessionBridge.rebind(b, probeSpark))
       def probeLegs(startRank: Long): Seq[String] =
         (0 until probeLegsN).map { i =>
           val b = idRange(idAtRank(startRank + i * probeSize),
@@ -238,7 +245,7 @@ object CutMaintScale {
           val n = b.count()
           settled(); inRec.set(0L); inBytes.set(0L)
           val t0 = System.nanoTime()
-          operators.CutReportMaintenance.ingest(spark, probeDir, b)
+          probeIngest(b)
           val secs = (System.nanoTime() - t0) / 1e9
           val (r, by) = settled()
           s"""{"docs":$n,"secs":${d2(secs)},"records_read":$r,""" +
@@ -252,16 +259,12 @@ object CutMaintScale {
         val s = idRange(lo, idAtRank(hiRank)).localCheckpoint(true)
         val n = s.count()
         val t0 = System.nanoTime()
-        operators.CutReportMaintenance.ingest(spark, probeDir, s)
-        operators.CutReportMaintenance.compact(spark, probeDir)
+        probeIngest(s)
+        operators.CutReportMaintenance.compact(probeSpark, probeDir)
         (n, (System.nanoTime() - t0) / 1e9)
       }
-      // try/finally (r15 advice): an exception mid-probe must not leak
-      // the tiny test bucket target into later work on the session.
       val probeJson =
-        if (!armOn("probe")) "" else try {
-          spark.conf.set("spark.graft.cutmaint.targetBucketRows",
-            probeTarget.toString)
+        if (!armOn("probe")) "" else {
           val (seed1Docs, seed1Secs) = seedAndCompact(0L, rank45)
           val legsSmall = probeLegs(rank45)
           val (seed2Docs, seed2Secs) = seedAndCompact(rank50, rank90)
@@ -272,8 +275,7 @@ object CutMaintScale {
             s""""seed2_docs":$seed2Docs,"seed2_secs":${d2(seed2Secs)},""" +
             s""""small_base":${legsSmall.mkString("[", ",", "]")},""" +
             s""""large_base":${legsLarge.mkString("[", ",", "]")}}"""
-        } finally
-          spark.conf.unset("spark.graft.cutmaint.targetBucketRows")
+        }
 
       val armJsons = Seq(appendJson, backfillJson, steadyJson,
         compactedJson, deleteJson, probeJson).filter(_.nonEmpty)

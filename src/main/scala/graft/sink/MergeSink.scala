@@ -4,12 +4,14 @@ import graft.config.TableSpec
 import graft.operators.{MergeOps, Scd2, Skew, VersionedDir}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Keyed-merge sinks. The reference merges through Redshift (staging table
   * + `DELETE USING` / `INSERT SELECT` in one transaction —
   * cdc_util/redshift_sink.py:465-547); we provide the same algebra against
   * one parquet target, [[ParquetMergeTarget]]: a key-bucketed table
-  * (`buckets = 1` is the whole-table case) whose merge is the type-1
+  * whose bucket count follows its size (one bucket, the whole-table
+  * case, until it outgrows 128 MiB) and whose merge is the type-1
   * upsert or, for `scd2_history` specs, the type-2 history fold. It lets
   * every merge semantics be oracle-tested with no warehouse. It commits
   * the way every on-disk writer here does: a new `v<n>` directory, then
@@ -32,11 +34,18 @@ trait MergeTarget {
 
 /** Parquet merge target (SURVEY §7.5): the table is laid out as parquet
   * partitioned by a stable key bucket
-  * `kb_aws = pmod(xxhash64(merge keys), buckets)`, and a merge reads and
+  * `kb_aws = pmod(xxhash64(merge keys), n)`, and a merge reads and
   * rewrites ONLY the buckets whose keys appear in the stage batch:
   *
-  *  - the target scan is partition-pruned to the touched buckets (a CDC
-  *    micro-batch touches few buckets relative to a 100 TB table);
+  *  - the bucket count `n` follows the table's size: the smallest power
+  *    of two that keeps each bucket under `bucketBytes` (Spark's 128 MiB
+  *    default split size, [[ParquetMergeTarget.BucketBytes]]), counting
+  *    the committed table's file bytes plus the stage's size estimate,
+  *    capped at `buckets`. A table of a few MB is one bucket, so its
+  *    merge is one read and one write, with no bucket probe; a large
+  *    table's merge reads only the buckets its stage touches;
+  *  - `n` only grows, by powers of two. A growth step is the same merge
+  *    with every live bucket touched, written at the new `n`;
   *  - the table is a [[VersionedDir]]: each merge writes the touched
   *    buckets into `v<n+1>`, hard-links every untouched bucket's files
   *    from `v<n>` (same inode and mtime — untouched data is never
@@ -45,13 +54,18 @@ trait MergeTarget {
   *    pre-batch or post-batch table; a crash before the pointer move
   *    leaves `v<n>` live, and the checkpoint replay purges the orphan
   *    and re-merges the batch (the merge algebra is idempotent);
+  *  - each version carries a layout marker, `_layout`: its bucket count
+  *    and its schema (Spark JSON), written before the pointer moves, so
+  *    it flips with the version. Merges and snapshots read with that
+  *    schema instead of a `mergeSchema` footer pass: a column that a
+  *    bucket's files lack (a bucket untouched since a schema drift)
+  *    reads as null, as `mergeSchema` gives it;
   *  - bucket assignment is a pure hash of the key — stable across batches
-  *    and replays;
+  *    and replays at a given `n`;
   *  - every rewrite leaves ONE file per live bucket: the write is clustered
-  *    on `kb_aws`, so each bucket is written by exactly one task and write
-  *    parallelism is bounded by the number of touched buckets. A legacy
-  *    bucket holding many files is compacted to one the first time a merge
-  *    touches it.
+  *    into `n` partitions on `kb_aws`, so each bucket is written by exactly
+  *    one task. A legacy bucket holding many files is compacted to one the
+  *    first time a merge touches it.
   *
   * The merge algebra comes from the spec on each batch:
   *  - type-1 (default): [[MergeOps.merge]] — last-write-wins upsert with
@@ -63,17 +77,27 @@ trait MergeTarget {
   *    tracked columns are the stage columns minus keys and meta.
   * Both are no-ops on a replayed batch (the T3 idempotence).
   *
-  * A table written before versioning (top-level `kb_aws=N` directories,
-  * or older top-level unbucketed files) is read in place and becomes
-  * `v0` on its first merge; `snapshot` drops the internal bucket column,
-  * so readers see the same schema under any bucket count. */
-final class ParquetMergeTarget(path: String, buckets: Int = 64) extends MergeTarget {
-  import ParquetMergeTarget.{Kb, MetaCols}
+  * A bucketed version without a marker was written at the constructor's
+  * `buckets` count: it is read with `mergeSchema`, and its next merge
+  * keeps that count and writes the marker. A table written before
+  * versioning (top-level `kb_aws=N` directories, or older top-level
+  * unbucketed files) is read in place and becomes `v0` on its first
+  * merge; `snapshot` drops the internal bucket column, so readers see the
+  * same schema under any bucket count.
+  *
+  * `bucketBytes` is a test seam: specs pass a tiny target to reach a
+  * many-bucket layout on kilobytes of data. */
+final class ParquetMergeTarget private[graft] (path: String, buckets: Int, bucketBytes: Long)
+    extends MergeTarget {
+  import ParquetMergeTarget.{Kb, Layout, LayoutFile, MetaCols}
+
+  /** `buckets` caps the size-derived bucket count. */
+  def this(path: String, buckets: Int = 64) = this(path, buckets, ParquetMergeTarget.BucketBytes)
 
   private val table = new java.io.File(path).getAbsoluteFile
   private val versions = new VersionedDir(table)
 
-  /** `kb_aws=N` directory names under `dir` — the layout marker. */
+  /** `kb_aws=N` directory names under `dir` — the bucketed layout. */
   private def bucketNames(dir: java.io.File): Set[String] =
     Option(dir.list()).getOrElse(Array.empty).filter(_.startsWith(s"$Kb=")).toSet
 
@@ -82,6 +106,19 @@ final class ParquetMergeTarget(path: String, buckets: Int = 64) extends MergeTar
   private def live(): java.io.File = {
     val cur = versions.current
     if (cur >= 0) versions.dir(cur) else { restoreHops(); table }
+  }
+
+  /** The layout marker of version directory `dir`: its bucket count and
+    * schema. Read from `dir` itself, so a reader pairs the files it reads
+    * with their own version's marker. */
+  private def layoutOf(dir: java.io.File): Option[Layout] = {
+    val f = new java.io.File(dir, LayoutFile)
+    if (!f.isFile) None
+    else {
+      val Array(n, schema) =
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").split("\n", 2)
+      Some(Layout(n.trim.toInt, DataType.fromJson(schema).asInstanceOf[StructType]))
+    }
   }
 
   /** Pre-versioned tables only: restore any hop the old rename-swap
@@ -105,17 +142,40 @@ final class ParquetMergeTarget(path: String, buckets: Int = 64) extends MergeTar
   def snapshot(spark: SparkSession): DataFrame = {
     val dir = live()
     require(dir.exists(), s"no target at $path")
-    spark.read.option("mergeSchema", "true").parquet(dir.getPath).drop(Kb)
+    layoutOf(dir).fold(spark.read.option("mergeSchema", "true"))(l => spark.read.schema(l.schema))
+      .parquet(dir.getPath).drop(Kb)
   }
 
-  /** Write `merged` as bucket directories under `dir`, clustered on the
-    * bucket: the shuffle puts each bucket's rows in exactly one task, so
-    * each `kb_aws=N` directory gets exactly one file. Unclustered, every
-    * write task (one per scan split of the target plus one per stage
-    * partition) holds rows of nearly every bucket and opens a file for
-    * each, and the next merge's scan splits multiply the count again. */
-  private def write(merged: DataFrame, bucketOf: Column, dir: java.io.File): Unit =
-    merged.withColumn(Kb, bucketOf).repartition(col(Kb))
+  /** The smallest power of two that keeps each bucket of a `bytes`-sized
+    * table under `bucketBytes`, capped at `buckets`. */
+  private def sized(bytes: Long): Int = {
+    var n = 1
+    while (n < buckets && bytes > n.toLong * bucketBytes) n *= 2
+    math.min(n, buckets)
+  }
+
+  /** Bytes of every file under `f`. */
+  private def bytesUnder(f: java.io.File): Long =
+    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).map(bytesUnder).sum
+    else f.length()
+
+  /** The stage's bytes: the optimizer's size estimate. One it could not
+    * make (Spark reports `Long.MaxValue`) counts as nothing — growing on
+    * it would pin the ceiling for good, and the committed bytes catch up
+    * on the next merge. */
+  private def stageBytes(stage: DataFrame): Long = {
+    val est = stage.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (est >= Long.MaxValue) 0L else est.toLong
+  }
+
+  /** Write `merged` as `n` bucket directories under `dir`, clustered on
+    * the bucket: the shuffle puts each bucket's rows in exactly one task,
+    * so each `kb_aws=N` directory gets exactly one file. Unclustered,
+    * every write task (one per scan split of the target plus one per
+    * stage partition) holds rows of nearly every bucket and opens a file
+    * for each, and the next merge's scan splits multiply the count again. */
+  private def write(merged: DataFrame, bucketOf: Column, n: Int, dir: java.io.File): Unit =
+    merged.withColumn(Kb, bucketOf).repartition(n, col(Kb))
       .write.mode(SaveMode.Overwrite).partitionBy(Kb).parquet(dir.getPath)
 
   def merge(stage0: DataFrame, spec: TableSpec): Unit = versions.withWriterLock {
@@ -134,36 +194,45 @@ final class ParquetMergeTarget(path: String, buckets: Int = 64) extends MergeTar
       if (spec.scd2History) Scd2.merge(target, stage, keys, "ts_ms_aws", tracked, isDelete)
       else if (spec.skipDelete) MergeOps.mergeSkipDelete(target, stage, keys, MetaCols)
       else MergeOps.merge(target, stage, keys, isDelete, MetaCols)
-    val bucketOf = Skew.keyBucket(keys.map(col), buckets)
     val cur = versions.current
     val src = live()
     val next = versions.dir(cur + 1)
     VersionedDir.deleteTree(next) // the orphan of a crashed writer, if any
     val liveBuckets = bucketNames(src)
-    val (merged, untouched) =
+    val layout = layoutOf(src)
+    // A bucketed version without a marker was written at `buckets`.
+    val liveN = layout.map(_.buckets).getOrElse(if (liveBuckets.isEmpty) 1 else buckets)
+    val n = math.max(liveN, sized(bytesUnder(src) + stageBytes(stage)))
+    val bucketOf = Skew.keyBucket(keys.map(col), n)
+    val (merged, untouched, prior) =
       if (liveBuckets.isEmpty) {
         // Create — or fold an older unbucketed table in one whole-table
         // pass. A dir with neither layout is a create, not a migration.
         val legacy = Option(src.list()).getOrElse(Array.empty).exists(_.endsWith(".parquet"))
-        (if (legacy) fold(spark.read.parquet(src.getPath)) else create(), Set.empty[String])
+        (if (legacy) fold(spark.read.parquet(src.getPath)) else create(), Set.empty[String],
+         new StructType())
       } else {
-        // ≤ `buckets` distinct values — a bounded collect by design.
-        val touched = stage.select(bucketOf).distinct().collect().map(b => s"$Kb=${b.getInt(0)}")
+        // The whole table's schema: the marker's, or one mergeSchema pass
+        // over a version written without one (its untouched buckets may
+        // hold columns the touched ones lack).
+        val schema = layout.map(_.schema).getOrElse(
+          spark.read.option("mergeSchema", "true").parquet(src.getPath).drop(Kb).schema)
+        // At one bucket, or when `n` grows, every live bucket is touched;
+        // otherwise ≤ `n` distinct values — a bounded collect by design.
+        val touched =
+          if (n == 1 || n > liveN) liveBuckets
+          else stage.select(bucketOf).distinct().collect().map(b => s"$Kb=${b.getInt(0)}").toSet
         // Read ONLY the touched bucket directories (listed explicitly with
-        // basePath): both the data AND the mergeSchema footer pass stay
-        // O(touched buckets) — a whole-table read with a runtime filter would
-        // still pay schema inference over every file in the table each
-        // trigger. mergeSchema: buckets rewritten after a schema drift carry
-        // wider files than untouched ones; a single-footer sample must not
-        // drop the drifted columns from kept rows. Rows of co-bucketed OTHER
-        // keys pass through the fold unchanged and are rewritten with them.
+        // basePath), with the table's schema: a column a touched file
+        // lacks reads as null. Rows of co-bucketed OTHER keys pass through
+        // the fold unchanged and are rewritten with them.
         val touchedDirs = touched.filter(liveBuckets).map(new java.io.File(src, _).getPath)
         (if (touchedDirs.isEmpty) create()
-         else fold(spark.read.option("mergeSchema", "true").option("basePath", src.getPath)
+         else fold(spark.read.schema(schema).option("basePath", src.getPath)
            .parquet(touchedDirs.toIndexedSeq: _*).drop(Kb)),
-         liveBuckets -- touched)
+         liveBuckets -- touched, schema)
       }
-    write(merged, bucketOf, next)
+    write(merged, bucketOf, n, next)
     // Untouched buckets join the new version as hard links to their files.
     for (name <- untouched) {
       val to = new java.io.File(next, name)
@@ -175,6 +244,11 @@ final class ParquetMergeTarget(path: String, buckets: Int = 64) extends MergeTar
     // one zero-row file instead, so the table stays readable with its
     // last columns.
     if (bucketNames(next).isEmpty) merged.limit(0).write.parquet(new java.io.File(next, s"$Kb=0").getPath)
+    // The marker's schema keeps the columns of untouched buckets that
+    // this batch's rows lack.
+    val kept = prior.filterNot(f => merged.columns.exists(_.equalsIgnoreCase(f.name)))
+    VersionedDir.writeAtomically(new java.io.File(next, LayoutFile).toPath,
+      s"$n\n${StructType(merged.schema.fields ++ kept).json}")
     versions.commit(cur + 1)
     versions.dropUnversioned()
   }
@@ -182,6 +256,13 @@ final class ParquetMergeTarget(path: String, buckets: Int = 64) extends MergeTar
 
 private object ParquetMergeTarget {
   final val Kb = "kb_aws"
+  /** The layout marker in each version: bucket count, then schema JSON. */
+  final val LayoutFile = "_layout"
+  final case class Layout(buckets: Int, schema: StructType)
+  /** The per-bucket byte target: Spark's default split size
+    * (`spark.sql.files.maxPartitionBytes`, 128 MiB), so a bucket is
+    * about one scan task's input. */
+  final val BucketBytes = 128L << 20
   /** Stage meta columns, never stored in the target. */
   final val MetaCols = Seq("op_aws", "ts_ms_aws", "idx_aws")
 }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.VersionedDir
@@ -32,11 +33,21 @@ object StreamScale {
   private val RocksDb = "org.apache.spark.sql.execution.streaming.state." +
     "RocksDBStateStoreProvider"
 
+  /** A clone of `spark` whose streaming queries keep state in RocksDB.
+    * The probes run on the clone, so the provider never reaches the
+    * caller's session, and a value the caller set for it survives. */
+  private def onRocksDb(spark: SparkSession): SparkSession = {
+    val s = SessionBridge.cloneSession(spark)
+    s.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDb)
+    s
+  }
+
   /** Runs the three stateful window aggs over `copies` × sfDir events
     * under RocksDB; returns one Probe per agg. Setup (writing the
     * scaled input parquet) is untimed; each probe times query start →
     * AvailableNow completion. */
-  def run(spark: SparkSession, sfDir: String, copies: Int): Seq[Probe] = {
+  def run(caller: SparkSession, sfDir: String, copies: Int): Seq[Probe] = {
+    val spark = onRocksDb(caller)
     val tmp = Files.createTempDirectory("graft-streamscale").toString
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("ts"), col("event_type"), col("value"))
@@ -63,7 +74,6 @@ object StreamScale {
       "hist" -> (df => StreamAggs.windowHistPercentiles(df, "60 minutes",
         "0 minutes")))
 
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDb)
     try aggs.map { case (name, f) =>
       val src = spark.readStream.schema(schema).parquet(s"$tmp/in")
       val t0 = System.nanoTime()
@@ -79,7 +89,6 @@ object StreamScale {
         if (sos.isEmpty) -1L else sos.map(_.numRowsTotal).max,
         if (sos.isEmpty) -1L else sos.map(_.memoryUsedBytes).max)
     } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       // The replicated input is copies× the events table plus three
       // checkpoint trees — left behind, repeated Bench sweeps would
       // fill /tmp on a long-lived host.
@@ -104,7 +113,8 @@ object StreamScale {
     * The claim either way: state rows IDENTICAL at 1× and `copies`×
     * while input rows scale by `copies` (a re-observed owner neither
     * emits nor grows state). */
-  def docStateProbes(spark: SparkSession, sfDir: String, copies: Int): Seq[Probe] = {
+  def docStateProbes(caller: SparkSession, sfDir: String, copies: Int): Seq[Probe] = {
+    val spark = onRocksDb(caller)
     val tmp = Files.createTempDirectory("graft-streamscale-doc").toString
     try {
       val docs = graft.Tables.documents(spark, sfDir)
@@ -125,8 +135,7 @@ object StreamScale {
         "substr" -> (src => StreamAggs.streamingTokenSpanMarks(src,
           "ts", "text", "doc_id", watermark = "1 hour",
           stateTtlMs = 86400000L, W = 10).toDF()))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDb)
-      try probes.map { case (name, f) =>
+      probes.map { case (name, f) =>
         val src = spark.readStream.schema(schema).parquet(s"$tmp/in")
         val t0 = System.nanoTime()
         val q = f(src).writeStream.format("noop").outputMode("append")
@@ -138,7 +147,7 @@ object StreamScale {
         Probe(name, rows, secs,
           if (sos.isEmpty) -1L else sos.map(_.numRowsTotal).max,
           if (sos.isEmpty) -1L else sos.map(_.memoryUsedBytes).max)
-      } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      }
     } finally VersionedDir.deleteTree(new java.io.File(tmp))
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import graft.config.{JobConfig, TableSpec}
 import graft.envelope.FlinkDebeziumCdc
-import graft.operators.{Dedup, VersionedDir}
+import graft.operators.{Dedup, Skew, VersionedDir}
 import graft.sink.{CopyExecutor, JdbcWriteExecutor, MergeTarget, ParquetMergeTarget, ReplayCopyExecutor, WarehouseMergeSink}
 import graft.sources.CdcGen
 import graft.streaming.CdcPipeline
@@ -37,6 +37,21 @@ class PipelineSpec extends SparkSuite {
     assert(files.nonEmpty)
     for ((dir, fs) <- files) assert(fs.size == 1, s"$dir holds ${fs.size} files")
   }
+
+  /** A target laid out at its `n`-bucket ceiling on kilobytes of data: a
+    * one-byte bucket target makes the size rule ask for every bucket. */
+  private def atCeiling(path: String, n: Int = 64): ParquetMergeTarget =
+    new ParquetMergeTarget(path, n, 1L)
+
+  /** The bucket count in the live version's layout marker, if it has one. */
+  private def markedBuckets(table: String): Option[Int] = {
+    val f = new java.io.File(liveDir(table), "_layout")
+    if (!f.isFile) None
+    else Some(new String(Files.readAllBytes(f.toPath), "UTF-8").linesIterator.next().trim.toInt)
+  }
+
+  private def bucketOf(id: Long, n: Int): Int =
+    Seq(id).toDF("id").select(Skew.keyBucket(Seq(col("id")), n)).as[Int].head()
 
   /** Type-1 oracle that runs none of the target's code: fold `(id, v, op)`
     * rows into a Map — upsert, or remove on `d`. */
@@ -480,7 +495,7 @@ class PipelineSpec extends SparkSuite {
     val root = Files.createTempDirectory("graft-bucket").toString
     val spec = TableSpec("d", "t", Seq("id"))
     val nb = 8
-    val bt = new ParquetMergeTarget(s"$root/b", buckets = nb)
+    val bt = atCeiling(s"$root/b", nb)
     var want = Map.empty[Long, String]
     def merge(rows: Seq[(Long, String, String)]): Unit = {
       bt.merge(rows.toDF("id", "v", "op_aws"), spec); want = upsertFold(want, rows)
@@ -523,7 +538,7 @@ class PipelineSpec extends SparkSuite {
   test("bucketed parquet target: every merge leaves one file per bucket (64 buckets), ≡ whole-table merge") {
     val root = Files.createTempDirectory("graft-layout").toString
     val spec = TableSpec("d", "t", Seq("id"))
-    val bt = new ParquetMergeTarget(s"$root/b")
+    val bt = atCeiling(s"$root/b")
     def batch(ids: Range, v: String, op: Long => String) =
       ids.map(i => (i.toLong, s"$v$i", op(i.toLong)))
     val batches = Seq(
@@ -569,10 +584,16 @@ class PipelineSpec extends SparkSuite {
   test("bucketed target under schema drift: untouched old-schema buckets keep their values") {
     val root = Files.createTempDirectory("graft-drift").toString
     val spec = TableSpec("d", "t", Seq("id"))
-    val bt = new ParquetMergeTarget(s"$root/t", buckets = 8)
+    val bt = atCeiling(s"$root/t", 8)
     bt.merge((1 to 64).map(i => (i.toLong, s"v$i", "c")).toDF("id", "v", "op_aws"), spec)
     // drifted batch adds `extra`; only its buckets are rewritten wider
     bt.merge(Seq((1L, "v1x", 7L, "u")).toDF("id", "v", "extra", "op_aws"), spec)
+    // the other buckets' files lack the column: the layout marker's
+    // schema, not a footer pass, gives it to them as null
+    val narrow = bucketFiles(s"$root/t").keySet - s"kb_aws=${bucketOf(1L, 8)}"
+    assert(narrow.size == 7)
+    for (d <- narrow)
+      assert(!spark.read.parquet(new java.io.File(liveDir(s"$root/t"), d).getPath).columns.contains("extra"))
     val snap = bt.snapshot(spark)
     assert(snap.columns.contains("extra"), "drifted column lost to a narrow footer sample")
     val byId = snap.select(col("id"), col("extra")).as[(Long, Option[Long])].collect().toMap
@@ -621,7 +642,7 @@ class PipelineSpec extends SparkSuite {
     val root = Files.createTempDirectory("graft-empty").toString
     val spec = TableSpec("d", "t", Seq("id"))
     def stage(rows: Seq[(Long, String, String)]) = rows.toDF("id", "v", "op_aws")
-    val bt = new ParquetMergeTarget(s"$root/t", buckets = 4)
+    val bt = atCeiling(s"$root/t", 4)
     bt.merge(stage((1 to 8).map(i => (i.toLong, s"v$i", "c"))), spec)
     bt.merge(stage((1 to 8).map(i => (i.toLong, "x", "d"))), spec) // empties every bucket
     // the emptied table stays readable: zero rows, its last columns
@@ -641,7 +662,7 @@ class PipelineSpec extends SparkSuite {
     (1 to 20).map(i => (i.toLong, s"v$i")).toDF("id", "v").write.parquet(s"$root/t")
     assert(!new java.io.File(s"$root/t").listFiles().exists(_.getName.startsWith("kb_aws=")))
     // first merge migrates and applies the batch
-    val bt = new ParquetMergeTarget(s"$root/t", buckets = 4)
+    val bt = atCeiling(s"$root/t", 4)
     bt.merge(stage(Seq((1L, "v1x", "u"), (2L, "x", "d"), (21L, "v21", "c"))), spec)
     assert(liveDir(s"$root/t").listFiles().exists(_.getName.startsWith("kb_aws=")))
     val got = contents(bt)
@@ -661,7 +682,7 @@ class PipelineSpec extends SparkSuite {
   test("versioned target: a lazy snapshot taken before a merge reads the pre-batch rows after it") {
     val root = Files.createTempDirectory("graft-lazy").toString
     val spec = TableSpec("d", "t", Seq("id"))
-    val bt = new ParquetMergeTarget(s"$root/t", buckets = 4)
+    val bt = atCeiling(s"$root/t", 4)
     val b1 = (1 to 32).map(i => (i.toLong, s"a$i", "c"))
     bt.merge(b1.toDF("id", "v", "op_aws"), spec)
     val lazySnap = bt.snapshot(spark)
@@ -675,7 +696,7 @@ class PipelineSpec extends SparkSuite {
   test("versioned target: a concurrent reader only ever sees a whole table state") {
     val root = Files.createTempDirectory("graft-isolation").toString
     val spec = TableSpec("d", "t", Seq("id"))
-    val bt = new ParquetMergeTarget(s"$root/t", buckets = 8)
+    val bt = atCeiling(s"$root/t", 8)
     // every batch rewrites all 64 keys, so all 8 buckets
     def batch(k: Int) = (1 to 64).map(i => (i.toLong, s"s$k-$i", if (k == 0) "c" else "u"))
     val states = (0 to 5).map(k => upsertFold(Map.empty, batch(k)))
@@ -700,8 +721,8 @@ class PipelineSpec extends SparkSuite {
     def stage(rows: Seq[(Long, String, String)]) = rows.toDF("id", "v", "op_aws")
     val b1 = (1 to 32).map(i => (i.toLong, s"a$i", "c"))
     val b2 = (1 to 32 by 3).map(i => (i.toLong, s"b$i", if (i % 2 == 0) "d" else "u")) :+ ((40L, "b40", "c"))
-    val bt = new ParquetMergeTarget(s"$root/t", buckets = 4)
-    val twin = new ParquetMergeTarget(s"$root/twin", buckets = 4)
+    val bt = atCeiling(s"$root/t", 4)
+    val twin = atCeiling(s"$root/twin", 4)
     Seq(bt, twin).foreach(_.merge(stage(b1), spec))
     twin.merge(stage(b2), spec)
     // the crash: one bucket of b2's version landed, the pointer never moved
@@ -717,7 +738,7 @@ class PipelineSpec extends SparkSuite {
   test("versioned target: a merge while another writer holds the lock fails fast and leaves the table unchanged") {
     val root = Files.createTempDirectory("graft-locked").toString
     val spec = TableSpec("d", "t", Seq("id"))
-    val bt = new ParquetMergeTarget(s"$root/t", buckets = 4)
+    val bt = atCeiling(s"$root/t", 4)
     val b1 = (1 to 32).map(i => (i.toLong, s"a$i", "c"))
     bt.merge(b1.toDF("id", "v", "op_aws"), spec)
     val files = bucketFiles(s"$root/t")
@@ -735,6 +756,135 @@ class PipelineSpec extends SparkSuite {
     assert(bucketFiles(s"$root/t") == files)
   }
 
+  test("size-derived layout: a factory target fed small batches is one bucket and stays one") {
+    val dir = Files.createTempDirectory("graft-one-bucket").toString
+    val spec = TableSpec("d", "t", Seq("id"))
+    val t = graft.streaming.CdcApp.sinkFactory(spark, dir)(spec)
+    var want = Map.empty[Long, String]
+    for (k <- 0 until 3) {
+      val rows = (1 to 500).map(i => ((k * 200 + i).toLong, s"v$k-$i", if (i % 9 == 0) "d" else "u"))
+      t.merge(rows.toDF("id", "v", "op_aws"), spec); want = upsertFold(want, rows)
+      assert(bucketFiles(s"$dir/t").keySet == Set("kb_aws=0"))
+      assertOneFilePerBucket(s"$dir/t")
+      assert(markedBuckets(s"$dir/t").contains(1))
+      assert(contents(t) == want)
+    }
+  }
+
+  test("size-derived layout: the merge that outgrows the byte target re-lays the table out in one version") {
+    val root = Files.createTempDirectory("graft-grow").toString
+    val spec = TableSpec("d", "t", Seq("id"))
+    val table = s"$root/t"
+    // 200 stage rows estimate at ~11 KB: the first merge fits one bucket,
+    // and the committed bytes pass 20 KB within a few merges
+    val bt = new ParquetMergeTarget(table, 64, 20000L)
+    val versions = VersionedDir(table)
+    var want = Map.empty[Long, String]
+    def merge(rows: Seq[(Long, String, String)]): Unit = {
+      bt.merge(rows.toDF("id", "v", "op_aws"), spec); want = upsertFold(want, rows)
+    }
+    merge((1 to 200).map(i => (i.toLong, s"a$i", "c")))
+    assert(markedBuckets(table).contains(1))
+    var k = 1
+    while (markedBuckets(table).contains(1) && k < 10) {
+      val v = versions.current
+      merge((1 to 200).map(i => ((k * 200 + i).toLong, s"b$i", "c")))
+      assert(versions.current == v + 1)
+      k += 1
+    }
+    val n = markedBuckets(table).get
+    assert(n > 1 && Integer.bitCount(n) == 1, s"the table grew to $n buckets")
+    assert(bucketFiles(table).keySet == (0 until n).map(b => s"kb_aws=$b").toSet)
+    assertOneFilePerBucket(table)
+    assert(contents(bt) == want)
+    // the next merge touches one bucket and keeps the others' files
+    Thread.sleep(1100) // ensure mtime resolution cannot mask a rewrite
+    val before = bucketFiles(table)
+    merge(Seq((1L, "a1x", "u")))
+    assert(markedBuckets(table).contains(n))
+    val touched = s"kb_aws=${bucketOf(1L, n)}"
+    val after = bucketFiles(table)
+    for ((d, files) <- before if d != touched) assert(after(d) == files, s"untouched $d was rewritten")
+    assert(after(touched) != before(touched))
+    assert(contents(bt) == want)
+  }
+
+  test("snapshot of a table with a layout marker launches no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = Files.createTempDirectory("graft-nojob").toString
+    val spec = TableSpec("d", "t", Seq("id"))
+    val bt = new ParquetMergeTarget(s"$root/t", buckets = 4)
+    bt.merge((1 to 64).map(i => (i.toLong, s"v$i", "c")).toDF("id", "v", "op_aws"), spec)
+    bt.merge(Seq((70L, "v70", 7L, "c")).toDF("id", "v", "extra", "op_aws"), spec)
+    val group = "graft-snapshot-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val snap =
+      try {
+        spark.sparkContext.setJobGroup(group, "snapshot")
+        try bt.snapshot(spark) finally spark.sparkContext.clearJobGroup()
+      } finally {
+        org.apache.spark.sql.graftbridge.SessionBridge.awaitListeners(spark)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    assert(jobs.get == 0, s"snapshot ran ${jobs.get} Spark jobs")
+    assert(snap.columns.toSet == Set("id", "v", "extra"))
+    assert(contents(bt) == (1 to 64).map(i => (i.toLong, s"v$i")).toMap + (70L -> "v70"))
+  }
+
+  test("layout marker: a batch that lands only in empty buckets keeps the other buckets' columns") {
+    val root = Files.createTempDirectory("graft-fresh-bucket").toString
+    val spec = TableSpec("d", "t", Seq("id"))
+    val bt = atCeiling(s"$root/t", 8)
+    val buckets = (1L to 64L).toDF("id").select(col("id"), Skew.keyBucket(Seq(col("id")), 8))
+      .as[(Long, Int)].collect().toMap
+    val first = buckets.collect { case (i, 0) => i }.toSeq.sorted.take(3)
+    val fresh = buckets.collectFirst { case (i, b) if b != 0 => i }.get
+    bt.merge(first.map(i => (i, s"v$i", i * 10, "c")).toDF("id", "v", "extra", "op_aws"), spec)
+    // `fresh` lands in an empty bucket, and its batch lacks `extra`
+    bt.merge(Seq((fresh, s"v$fresh", "c")).toDF("id", "v", "op_aws"), spec)
+    val got = bt.snapshot(spark).select(col("id"), col("extra")).as[(Long, Option[Long])].collect().toMap
+    assert(got == first.map(i => i -> Some(i * 10)).toMap + (fresh -> None))
+  }
+
+  test("a 64-bucket table without a layout marker reads unchanged; its first merge keeps 64 buckets and writes the marker") {
+    val root = Files.createTempDirectory("graft-unmarked").toString
+    val spec = TableSpec("d", "t", Seq("id"))
+    val table = s"$root/t"
+    // the layout a 64-bucket target wrote before markers: `v0` under the
+    // pointer, one file per bucket, and a drift column `extra` that only
+    // the buckets below 32 carry
+    val rows = (1 to 640).map(i => (i.toLong, s"v$i", i * 10L))
+    val all = rows.toDF("id", "v", "extra").withColumn("kb_aws", Skew.keyBucket(Seq(col("id")), 64))
+    all.filter(col("kb_aws") < 32).repartition(col("kb_aws"))
+      .write.partitionBy("kb_aws").parquet(s"$table/v0")
+    all.filter(col("kb_aws") >= 32).drop("extra").repartition(col("kb_aws"))
+      .write.mode("append").partitionBy("kb_aws").parquet(s"$table/v0")
+    VersionedDir(table).commit(0)
+    val extraOf = rows.map { case (i, _, e) => i -> (if (bucketOf(i, 64) < 32) Some(e) else None) }.toMap
+    def extras(t: MergeTarget) = t.snapshot(spark).select(col("id"), col("extra"))
+      .as[(Long, Option[Long])].collect().toMap
+    val bt = new ParquetMergeTarget(table)
+    assert(markedBuckets(table).isEmpty)
+    assert(contents(bt) == rows.map(r => r._1 -> r._2).toMap)
+    assert(extras(bt) == extraOf)
+    val before = bucketFiles(table)
+    assert(before.size == 64)
+    val s2 = Seq((1L, "v1x", "u"), (2L, "x", "d"), (5000L, "new", "c"))
+    bt.merge(s2.toDF("id", "v", "op_aws"), spec)
+    assert(markedBuckets(table).contains(64))
+    val after = bucketFiles(table)
+    assert(after.keySet == before.keySet ++ Set(s"kb_aws=${bucketOf(5000L, 64)}"))
+    val touched = Seq(1L, 2L, 5000L).map(i => s"kb_aws=${bucketOf(i, 64)}").toSet
+    for ((d, files) <- before if !touched(d)) assert(after(d) == files, s"untouched $d was rewritten")
+    assert(contents(bt) == upsertFold(rows.map(r => r._1 -> r._2).toMap, s2))
+    assert(extras(bt) == extraOf - 2L + (1L -> None) + (5000L -> None))
+  }
+
   test("super_as_variant: variant column survives bucketed merge + replay, variant_get readable") {
     import org.apache.spark.sql.functions.try_variant_get
     import org.apache.spark.sql.types.VariantType
@@ -750,7 +900,7 @@ class PipelineSpec extends SparkSuite {
     ).toDF("value")
     val sinks = scala.collection.concurrent.TrieMap.empty[String, MergeTarget]
     def run(): Unit = CdcPipeline.processBatch(batch, cfg, FlinkDebeziumCdc, s =>
-      sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}", buckets = 4)))
+      sinks.getOrElseUpdate(s.resolvedTarget, atCeiling(s"$dir/${s.resolvedTarget}", 4)))
     run(); run() // replay: idempotent with a variant column through the sink
     val tgt = sinks("t0").snapshot(spark)
     assert(tgt.schema("props").dataType == VariantType)
@@ -999,7 +1149,7 @@ class PipelineSpec extends SparkSuite {
     val lone = (6L to 60L by 2).find(k =>
       bucketOf(k) != bucketOf(2) && bucketOf(k) != bucketOf(4)).get
     val dir = Files.createTempDirectory("graft-scd2-bucket").toString
-    val bucketed = new ParquetMergeTarget(s"$dir/t0", buckets = nBuckets)
+    val bucketed = atCeiling(s"$dir/t0", nBuckets)
     val spec = t0.copy(scd2History = true)
     val cfg = JobConfig(tables = Seq(spec), threadMaxWorkers = 1, batchTimeoutMinutes = 5)
     def run(batch: Seq[(Long, Long, Long, Long, String)]): Unit = {
