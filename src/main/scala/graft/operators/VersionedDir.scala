@@ -20,14 +20,16 @@ final class VersionedDir(root: File) {
 
   def dir(v: Long): File = new File(root, s"v$v")
 
-  /** The trimmed text of file `name` in the committed version — a marker
-    * written into `v<n>` before the commit flips with the pointer. */
-  def committedText(name: String): Option[String] = {
-    val v = current
+  /** The trimmed text of file `name` in version `v` — a marker written
+    * into `v<n>` before the commit flips with the pointer. */
+  def textIn(v: Long, name: String): Option[String] = {
     val f = new File(dir(v), name)
     if (v >= 0 && f.isFile) Some(new String(Files.readAllBytes(f.toPath), "UTF-8").trim)
     else None
   }
+
+  /** [[textIn]] the committed version. */
+  def committedText(name: String): Option[String] = textIn(current, name)
 
   private def versions: Seq[Long] =
     Option(root.list()).toSeq.flatten.collect {

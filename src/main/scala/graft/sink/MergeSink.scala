@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * cdc_util/redshift_sink.py:465-547); we provide the same algebra against
   * one parquet target, [[ParquetMergeTarget]]: a key-bucketed table
   * whose bucket count follows its size (one bucket, the whole-table
-  * case, until it outgrows 128 MiB) and whose merge is the type-1
+  * case, until it outgrows 8 MiB) and whose merge is the type-1
   * upsert or, for `scd2_history` specs, the type-2 history fold. It lets
   * every merge semantics be oracle-tested with no warehouse. It commits
   * the way every on-disk writer here does: a new `v<n>` directory, then
@@ -38,14 +38,20 @@ trait MergeTarget {
   * rewrites ONLY the buckets whose keys appear in the stage batch:
   *
   *  - the bucket count `n` follows the table's size: the smallest power
-  *    of two that keeps each bucket under `bucketBytes` (Spark's 128 MiB
-  *    default split size, [[ParquetMergeTarget.BucketBytes]]), counting
-  *    the committed table's file bytes plus the stage's size estimate,
-  *    capped at `buckets`. A table of a few MB is one bucket, so its
-  *    merge is one read and one write, with no bucket probe; a large
-  *    table's merge reads only the buckets its stage touches;
+  *    of two that keeps each bucket under `bucketBytes`
+  *    ([[ParquetMergeTarget.BucketBytes]], 8 MiB), counting the
+  *    committed table's file bytes, capped at `maxBuckets`
+  *    ([[ParquetMergeTarget.MaxBuckets]], 64). A table under 8 MiB is
+  *    one bucket, so its merge is one read and one write, with no bucket
+  *    probe; a larger table's merge reads only the buckets its stage
+  *    touches, and from 512 MiB on the table has all 64 buckets;
   *  - `n` only grows, by powers of two. A growth step is the same merge
-  *    with every live bucket touched, written at the new `n`;
+  *    with every live bucket touched, written at the new `n`. The stage
+  *    is not counted: the optimizer's size estimate of a parsed and
+  *    deduped batch runs tens of times its real size, and is a scaled
+  *    `Long.MaxValue` over a leaf without statistics. So a table's first
+  *    merge lands as one bucket whatever its size, and the merge after
+  *    it re-lays the table out;
   *  - the table is a [[VersionedDir]]: each merge writes the touched
   *    buckets into `v<n+1>`, hard-links every untouched bucket's files
   *    from `v<n>` (same inode and mtime — untouched data is never
@@ -77,22 +83,22 @@ trait MergeTarget {
   *    tracked columns are the stage columns minus keys and meta.
   * Both are no-ops on a replayed batch (the T3 idempotence).
   *
-  * A bucketed version without a marker was written at the constructor's
-  * `buckets` count: it is read with `mergeSchema`, and its next merge
-  * keeps that count and writes the marker. A table written before
+  * A bucketed version without a marker was written at a fixed 64
+  * buckets (`maxBuckets`): it is read with `mergeSchema`, and its next
+  * merge keeps that count and writes the marker. A table written before
   * versioning (top-level `kb_aws=N` directories, or older top-level
   * unbucketed files) is read in place and becomes `v0` on its first
   * merge; `snapshot` drops the internal bucket column, so readers see the
   * same schema under any bucket count.
   *
-  * `bucketBytes` is a test seam: specs pass a tiny target to reach a
-  * many-bucket layout on kilobytes of data. */
-final class ParquetMergeTarget private[graft] (path: String, buckets: Int, bucketBytes: Long)
+  * `maxBuckets` and `bucketBytes` are a test seam: specs pass a zero
+  * byte target to reach a many-bucket layout from the first merge, and
+  * the count an unmarked table was written at. */
+final class ParquetMergeTarget private[graft] (path: String, maxBuckets: Int, bucketBytes: Long)
     extends MergeTarget {
   import ParquetMergeTarget.{Kb, Layout, LayoutFile, MetaCols}
 
-  /** `buckets` caps the size-derived bucket count. */
-  def this(path: String, buckets: Int = 64) = this(path, buckets, ParquetMergeTarget.BucketBytes)
+  def this(path: String) = this(path, ParquetMergeTarget.MaxBuckets, ParquetMergeTarget.BucketBytes)
 
   private val table = new java.io.File(path).getAbsoluteFile
   private val versions = new VersionedDir(table)
@@ -103,23 +109,17 @@ final class ParquetMergeTarget private[graft] (path: String, buckets: Int, bucke
 
   /** The live table: `v<current>`, or the table root itself for a table
     * written before versioning. */
-  private def live(): java.io.File = {
-    val cur = versions.current
-    if (cur >= 0) versions.dir(cur) else { restoreHops(); table }
-  }
+  private def live(v: Long): java.io.File =
+    if (v >= 0) versions.dir(v) else { restoreHops(); table }
 
-  /** The layout marker of version directory `dir`: its bucket count and
-    * schema. Read from `dir` itself, so a reader pairs the files it reads
-    * with their own version's marker. */
-  private def layoutOf(dir: java.io.File): Option[Layout] = {
-    val f = new java.io.File(dir, LayoutFile)
-    if (!f.isFile) None
-    else {
-      val Array(n, schema) =
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").split("\n", 2)
-      Some(Layout(n.trim.toInt, DataType.fromJson(schema).asInstanceOf[StructType]))
+  /** The layout marker of version `v`: its bucket count and schema. A
+    * reader takes `v` once and reads both the marker and the files from
+    * it, so it pairs the files with their own version's marker. */
+  private def layoutOf(v: Long): Option[Layout] =
+    versions.textIn(v, LayoutFile).map { text =>
+      val Array(n, schema) = text.split("\n", 2)
+      Layout(n.trim.toInt, DataType.fromJson(schema).asInstanceOf[StructType])
     }
-  }
 
   /** Pre-versioned tables only: restore any hop the old rename-swap
     * commit left behind — the whole-table hop (`<name>.old`) and every
@@ -140,33 +140,25 @@ final class ParquetMergeTarget private[graft] (path: String, buckets: Int, bucke
   }
 
   def snapshot(spark: SparkSession): DataFrame = {
-    val dir = live()
+    val cur = versions.current
+    val dir = live(cur)
     require(dir.exists(), s"no target at $path")
-    layoutOf(dir).fold(spark.read.option("mergeSchema", "true"))(l => spark.read.schema(l.schema))
+    layoutOf(cur).fold(spark.read.option("mergeSchema", "true"))(l => spark.read.schema(l.schema))
       .parquet(dir.getPath).drop(Kb)
   }
 
   /** The smallest power of two that keeps each bucket of a `bytes`-sized
-    * table under `bucketBytes`, capped at `buckets`. */
+    * table under `bucketBytes`, capped at `maxBuckets`. */
   private def sized(bytes: Long): Int = {
     var n = 1
-    while (n < buckets && bytes > n.toLong * bucketBytes) n *= 2
-    math.min(n, buckets)
+    while (n < maxBuckets && bytes >= n.toLong * bucketBytes) n *= 2
+    math.min(n, maxBuckets)
   }
 
   /** Bytes of every file under `f`. */
   private def bytesUnder(f: java.io.File): Long =
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).map(bytesUnder).sum
     else f.length()
-
-  /** The stage's bytes: the optimizer's size estimate. One it could not
-    * make (Spark reports `Long.MaxValue`) counts as nothing — growing on
-    * it would pin the ceiling for good, and the committed bytes catch up
-    * on the next merge. */
-  private def stageBytes(stage: DataFrame): Long = {
-    val est = stage.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est >= Long.MaxValue) 0L else est.toLong
-  }
 
   /** Write `merged` as `n` bucket directories under `dir`, clustered on
     * the bucket: the shuffle puts each bucket's rows in exactly one task,
@@ -195,14 +187,14 @@ final class ParquetMergeTarget private[graft] (path: String, buckets: Int, bucke
       else if (spec.skipDelete) MergeOps.mergeSkipDelete(target, stage, keys, MetaCols)
       else MergeOps.merge(target, stage, keys, isDelete, MetaCols)
     val cur = versions.current
-    val src = live()
+    val src = live(cur)
     val next = versions.dir(cur + 1)
     VersionedDir.deleteTree(next) // the orphan of a crashed writer, if any
     val liveBuckets = bucketNames(src)
-    val layout = layoutOf(src)
-    // A bucketed version without a marker was written at `buckets`.
-    val liveN = layout.map(_.buckets).getOrElse(if (liveBuckets.isEmpty) 1 else buckets)
-    val n = math.max(liveN, sized(bytesUnder(src) + stageBytes(stage)))
+    val layout = layoutOf(cur)
+    // A bucketed version without a marker was written at `maxBuckets`.
+    val liveN = layout.map(_.buckets).getOrElse(if (liveBuckets.isEmpty) 1 else maxBuckets)
+    val n = math.max(liveN, sized(bytesUnder(src)))
     val bucketOf = Skew.keyBucket(keys.map(col), n)
     val (merged, untouched, prior) =
       if (liveBuckets.isEmpty) {
@@ -259,10 +251,14 @@ private object ParquetMergeTarget {
   /** The layout marker in each version: bucket count, then schema JSON. */
   final val LayoutFile = "_layout"
   final case class Layout(buckets: Int, schema: StructType)
-  /** The per-bucket byte target: Spark's default split size
-    * (`spark.sql.files.maxPartitionBytes`, 128 MiB), so a bucket is
-    * about one scan task's input. */
-  final val BucketBytes = 128L << 20
+  /** The bucket count's ceiling, and the count of a version written
+    * without a marker. */
+  final val MaxBuckets = 64
+  /** The per-bucket byte target, taken from measured merges (ROADMAP
+    * direction 2): rewriting a bucket of up to about 8 MB costs no more
+    * than the jobs and files of a many-bucket merge, while a whole-table
+    * rewrite of 60 MB or more loses to 64 buckets. */
+  final val BucketBytes = 8L << 20
   /** Stage meta columns, never stored in the target. */
   final val MetaCols = Seq("op_aws", "ts_ms_aws", "idx_aws")
 }

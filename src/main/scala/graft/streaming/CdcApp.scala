@@ -72,8 +72,7 @@ object CdcApp {
     } else {
       val sinks = scala.collection.concurrent.TrieMap.empty[String, MergeTarget]
       // Size-derived bucketed layout: one bucket until the table outgrows
-      // Spark's 128 MiB split size, then per-batch I/O is O(touched
-      // buckets), not O(table).
+      // 8 MiB, then per-batch I/O is O(touched buckets), not O(table).
       // The target takes its merge algebra from each batch's spec:
       // `scd2_history` specs keep a type-2 version history instead of the
       // type-1 last-image table.

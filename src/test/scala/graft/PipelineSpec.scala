@@ -38,10 +38,12 @@ class PipelineSpec extends SparkSuite {
     for ((dir, fs) <- files) assert(fs.size == 1, s"$dir holds ${fs.size} files")
   }
 
-  /** A target laid out at its `n`-bucket ceiling on kilobytes of data: a
-    * one-byte bucket target makes the size rule ask for every bucket. */
+  /** A target laid out at its `n`-bucket ceiling from its first merge: no
+    * bucket is under a zero-byte target, so the size rule asks for every
+    * bucket. It also reads a table written at `n` buckets without a
+    * layout marker. */
   private def atCeiling(path: String, n: Int = 64): ParquetMergeTarget =
-    new ParquetMergeTarget(path, n, 1L)
+    new ParquetMergeTarget(path, n, 0L)
 
   /** The bucket count in the live version's layout marker, if it has one. */
   private def markedBuckets(table: String): Option[Int] = {
@@ -95,7 +97,7 @@ class PipelineSpec extends SparkSuite {
     val cfg = JobConfig(tables = Seq(t0, t1), threadMaxWorkers = 4, batchTimeoutMinutes = 5)
     val sinks = scala.collection.concurrent.TrieMap.empty[String, MergeTarget]
     def sinkFor(s: TableSpec): MergeTarget =
-      sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}", buckets = 1))
+      sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}"))
     val batch = CdcGen.debezium(events)
     val metrics = CdcPipeline.processBatch(batch, cfg, FlinkDebeziumCdc, sinkFor)
     val m0 = sinkFor(t0).snapshot(spark)
@@ -122,7 +124,7 @@ class PipelineSpec extends SparkSuite {
     val cfg = JobConfig(tables = Seq(spec), threadMaxWorkers = 2, batchTimeoutMinutes = 5)
     val sinks = scala.collection.concurrent.TrieMap.empty[String, MergeTarget]
     def sinkFor(s: TableSpec): MergeTarget =
-      sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}", buckets = 1))
+      sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}"))
     val metrics = CdcPipeline.processBatch(CdcGen.debezium(events), cfg, FlinkDebeziumCdc, sinkFor)
     val audit = sinks("t0_delete").snapshot(spark)
     // audit keys = every routed user with ≥1 delete event (deletes dedup
@@ -147,7 +149,7 @@ class PipelineSpec extends SparkSuite {
     val cfg = JobConfig(tables = Seq(spec), threadMaxWorkers = 1, batchTimeoutMinutes = 5)
     val sinks = scala.collection.concurrent.TrieMap.empty[String, MergeTarget]
     def sinkFor(s: TableSpec): MergeTarget =
-      sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}", buckets = 1))
+      sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}"))
     val batch = Seq(
       """{"before":{"id":2,"event_id":1,"k":1,"val":1.0},"after":null,"source":{"db":"cdc_db","table":"t0","ts_ms":100},"op":"d","ts_ms":100}""",
       """{"before":null,"after":{"id":2,"event_id":2,"k":2,"val":2.0},"source":{"db":"cdc_db","table":"t0","ts_ms":200},"op":"u","ts_ms":200}"""
@@ -184,7 +186,7 @@ class PipelineSpec extends SparkSuite {
           batchTimeoutMinutes = 5, maxError = 0)
         val sinks = scala.collection.concurrent.TrieMap.empty[String, MergeTarget]
         CdcPipeline.processBatch(batch, cfg, FlinkDebeziumCdc, s =>
-          sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}", buckets = 1)))
+          sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}")))
         (sinks("t0").snapshot(spark).orderBy("id").collect().toSeq,
           sinks("t0_delete").snapshot(spark).orderBy("id").collect().toSeq)
       }
@@ -213,13 +215,13 @@ class PipelineSpec extends SparkSuite {
         batchTimeoutMinutes = 5, maxError = maxError)
       val sinks = scala.collection.concurrent.TrieMap.empty[String, MergeTarget]
       CdcPipeline.processBatch(batch, cfg, FlinkDebeziumCdc, s =>
-        sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}", buckets = 1)),
+        sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}")),
         payloadFor = _ => Some(CdcGen.payloadSchema))
       dir
     }
     // tolerance 2 covers both malformed rows → merge succeeds, no null keys
     val dir = run(maxError = 2)
-    val merged = new ParquetMergeTarget(s"$dir/t0", buckets = 1).snapshot(spark)
+    val merged = new ParquetMergeTarget(s"$dir/t0").snapshot(spark)
     assert(merged.count() > 0 && merged.filter(col("id").isNull).count() == 0)
     // strict (0) → the same batch fails instead of silently dropping
     val e = intercept[Exception](run(maxError = 0))
@@ -284,7 +286,7 @@ class PipelineSpec extends SparkSuite {
     // pool threads created inside the scope), not System.out.
     Console.withOut(new java.io.PrintStream(buf, true)) {
       CdcPipeline.processBatch(CdcGen.debezium(events), cfg, FlinkDebeziumCdc, s =>
-        sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}", buckets = 1)))
+        sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}")))
     }
     val out = buf.toString
     assert(out.contains("cdc_db.t0 stage schema") && out.contains("id: long"))
@@ -309,7 +311,7 @@ class PipelineSpec extends SparkSuite {
     val cfg = JobConfig(tables = specs, threadMaxWorkers = n, batchTimeoutMinutes = 5)
     val sinks = scala.collection.concurrent.TrieMap.empty[String, MergeTarget]
     def sinkFor(s: TableSpec): MergeTarget =
-      sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}", buckets = 1))
+      sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}"))
     CdcPipeline.processBatch(CdcGen.debezium(events, numTables = n), cfg,
       FlinkDebeziumCdc, sinkFor)
     // Every table holds exactly its users' LWW winners (minus deletes).
@@ -345,7 +347,7 @@ class PipelineSpec extends SparkSuite {
     val cfg = JobConfig(tables = specs, threadMaxWorkers = n, batchTimeoutMinutes = 5)
     val sinks = scala.collection.concurrent.TrieMap.empty[String, MergeTarget]
     def sinkFor(s: TableSpec): MergeTarget =
-      sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}", buckets = 1))
+      sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}"))
     val metrics = CdcPipeline.processBatch(CdcGen.debezium(events, numTables = n),
       cfg, FlinkDebeziumCdc, sinkFor)
     val byTable = metrics.map(m => m.table -> m).toMap
@@ -403,7 +405,7 @@ class PipelineSpec extends SparkSuite {
     // high-water mark is the test's window into the pool's behavior.
     def sinkFor(s: TableSpec): MergeTarget =
       sinks.getOrElseUpdate(s.resolvedTarget, new MergeTarget {
-        private val inner = new ParquetMergeTarget(s"$dir/${s.resolvedTarget}", buckets = 1)
+        private val inner = new ParquetMergeTarget(s"$dir/${s.resolvedTarget}")
         def merge(stage: DataFrame, spec: TableSpec): Unit = {
           val now = live.incrementAndGet()
           highWater.accumulateAndGet(now, math.max)
@@ -462,7 +464,7 @@ class PipelineSpec extends SparkSuite {
       checkpointLocation = s"$root/ckpt")
     val sinks = scala.collection.concurrent.TrieMap.empty[String, MergeTarget]
     def sinkFor(s: TableSpec): MergeTarget =
-      sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$root/${s.resolvedTarget}", buckets = 1))
+      sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$root/${s.resolvedTarget}"))
     def lines(rows: Seq[String], f: String): Unit =
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/$f"),
         rows.mkString("\n").getBytes)
@@ -616,7 +618,7 @@ class PipelineSpec extends SparkSuite {
         .write.partitionBy("kb_aws").parquet(dir)
     preVersioned(s"$root/t", (1 to 32).map(i => (i.toLong, s"v$i")), 4)
     // per-bucket hop: crash left a bucket's only copy in its sibling hop
-    val bt = new ParquetMergeTarget(s"$root/t", buckets = 4)
+    val bt = atCeiling(s"$root/t", 4)
     val all = contents(bt)
     assert(all == (1 to 32).map(i => (i.toLong, s"v$i")).toMap)
     val someBucket = new java.io.File(s"$root/t").listFiles()
@@ -632,7 +634,7 @@ class PipelineSpec extends SparkSuite {
     // the merge migrated the table: only the version, pointer and lock remain
     assert(new java.io.File(s"$root/t").list().toSet == Set("v0", "_version", "_lock"))
     // whole-table hop (one bucket): same crash shape on the table directory itself
-    val pt = new ParquetMergeTarget(s"$root/p", buckets = 1)
+    val pt = atCeiling(s"$root/p", 1)
     preVersioned(s"$root/p", Seq((1L, "a"), (2L, "b")), 1)
     assert(new java.io.File(s"$root/p").renameTo(new java.io.File(s"$root/p.old")))
     assert(contents(pt) == Map(1L -> "a", 2L -> "b"))
@@ -775,9 +777,9 @@ class PipelineSpec extends SparkSuite {
     val root = Files.createTempDirectory("graft-grow").toString
     val spec = TableSpec("d", "t", Seq("id"))
     val table = s"$root/t"
-    // 200 stage rows estimate at ~11 KB: the first merge fits one bucket,
-    // and the committed bytes pass 20 KB within a few merges
-    val bt = new ParquetMergeTarget(table, 64, 20000L)
+    // the first merge is one bucket (nothing is committed yet), and the
+    // committed bytes pass 5 KB within a few 200-row merges
+    val bt = new ParquetMergeTarget(table, 64, 5000L)
     val versions = VersionedDir(table)
     var want = Map.empty[Long, String]
     def merge(rows: Seq[(Long, String, String)]): Unit = {
@@ -809,11 +811,32 @@ class PipelineSpec extends SparkSuite {
     assert(contents(bt) == want)
   }
 
+  test("size-derived layout: a stage without statistics under a narrowing projection stays one bucket") {
+    import org.apache.spark.sql.types._
+    val root = Files.createTempDirectory("graft-no-stats").toString
+    val spec = TableSpec("d", "t", Seq("id"))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("v", StringType),
+      StructField("pad", StringType), StructField("op_aws", StringType)))
+    val rows = (1 to 50).map(i => (i.toLong, s"v$i", "c"))
+    // a LogicalRDD carries no statistics; dropping `pad` scales Spark's
+    // default Long.MaxValue estimate down to a figure that is no size,
+    // and the size rule must not count it
+    val stage = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (i, v, op) => Row(i, v, "x" * 100, op) }), schema)
+      .drop("pad")
+    val est = stage.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(est < Long.MaxValue && est > BigInt(1L << 40), s"estimate $est")
+    val bt = new ParquetMergeTarget(s"$root/t")
+    bt.merge(stage, spec)
+    assert(markedBuckets(s"$root/t").contains(1))
+    assert(contents(bt) == upsertFold(Map.empty, rows))
+  }
+
   test("snapshot of a table with a layout marker launches no Spark job") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val root = Files.createTempDirectory("graft-nojob").toString
     val spec = TableSpec("d", "t", Seq("id"))
-    val bt = new ParquetMergeTarget(s"$root/t", buckets = 4)
+    val bt = new ParquetMergeTarget(s"$root/t")
     bt.merge((1 to 64).map(i => (i.toLong, s"v$i", "c")).toDF("id", "v", "op_aws"), spec)
     bt.merge(Seq((70L, "v70", 7L, "c")).toDF("id", "v", "extra", "op_aws"), spec)
     val group = "graft-snapshot-jobs"
@@ -1049,7 +1072,7 @@ class PipelineSpec extends SparkSuite {
       checkpointLocation = s"$dir/ckpt")
     val sinks = scala.collection.concurrent.TrieMap.empty[String, MergeTarget]
     def sinkFor(s: TableSpec): MergeTarget =
-      sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}", buckets = 1))
+      sinks.getOrElseUpdate(s.resolvedTarget, new ParquetMergeTarget(s"$dir/${s.resolvedTarget}"))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[String]
     val lines = CdcGen.debezium(events).as[String].collect()
